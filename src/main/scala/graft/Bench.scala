@@ -71,8 +71,9 @@ object Bench {
     spark
   }
 
-  /** Bench session + extra confs — for measurement tools (JoinAb) that
-    * A/B a single config knob against the exact bench baseline. */
+  /** Bench session + extra confs — for measurement harnesses (the
+    * perfbench JVM) that run on the exact bench baseline plus their own
+    * settings. */
   private[graft] def sessionWith(cpus: String,
                                  extra: Map[String, String]): SparkSession = {
     val b = sessionBuilder(cpus)

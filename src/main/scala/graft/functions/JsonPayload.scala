@@ -1,12 +1,14 @@
 package graft.functions
 
+import com.fasterxml.jackson.core.{JsonParser, JsonToken}
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, GetStructField, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, MapData}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native JSON payload accessors: one Jackson parse per row, inlined into
@@ -23,8 +25,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * scale, fresh executors JIT the same narrow path immediately.
   */
 object JsonPayload {
-  /** BigDecimal floats so scalar text round-trips verbatim ("5.5600"
-    * stays "5.5600", as get_json_object's streaming copy would). */
+  /** BigDecimal floats, so a float's text keeps its exact digits (no
+    * binary-double rounding, no `1.0E3` notation). It is NOT the
+    * payload's text: Jackson 2.21's tree reader strips trailing zeros,
+    * so `5.5600` reads `5.56`, `1.0` reads `1`, `-50e-2` reads `-0.5`,
+    * `1E+3` stays `1E+3` and `{"x":2.50}` serializes as `{"x":2.5}`
+    * (pinned in JsonFieldSpec). */
   private[functions] val mapper: ObjectMapper = {
     val m = new ObjectMapper()
     m.configure(DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS, true)
@@ -177,60 +183,43 @@ object JsonField {
         "multi-selector path where a single selector is required")
     sels(0)
   }
-}
 
-/** `struct<exists: boolean, raw: string>` for one dotted path of the
-  * payload, in one parse: `raw` follows get_json_object semantics (null
-  * for JSON null or missing), `exists` distinguishes the two (the
-  * json_object_keys probe it replaces).
-  *
-  * Path grammar ([[JsonField.splitPath]]): dot-separated segments; a
-  * purely NUMERIC unquoted segment indexes into an array (`a.0.b` — the
-  * jql crate's array access the reference routes `-c` paths through,
-  * /root/reference/src/consume.rs:311-443); an unquoted `[lo:hi]` segment
-  * slices an array with jql's inclusive bounds (`a.[1:2]`, the serialized
-  * sub-array; traversal can continue into it); a QUOTED segment is always
-  * a key lookup and may contain dots (`meta."a.b"`, the jql quoted
-  * selector). Against an OBJECT a numeric segment is an ordinary key
-  * lookup (JSON keys can be "0"); an out-of-range index, an index into
-  * a non-array, or a slice of a non-array is a missing path, same as an
-  * absent key.
-  *
-  * A top-level unquoted `,` separates SELECTORS (jql multi-selection):
-  * `a,b.c` resolves every selector from the root and yields the JSON
-  * array of their values — strings re-quoted, containers nested, JSON
-  * null as a null element. ANY selector missing makes the whole path a
-  * miss (the jql walker errors on the first failing selector); a quoted
-  * comma (`"k,l"`) stays an ordinary key. */
-case class JsonField(child: Expression, path: String) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
+  /** What one path resolves to: `raw` follows get_json_object semantics
+    * (null for JSON null or missing), `exists` tells the two apart. */
+  val ResultType: StructType = StructType(Seq(
     StructField("exists", BooleanType, nullable = false),
     StructField("raw", StringType, nullable = true)))
-  override def nullable: Boolean = false
 
-  // bind-time grammar validation: a malformed path fails the query at
-  // construction with the named error, not mid-task on an executor
-  JsonField.splitSelectors(path)
+  /** `struct<exists, raw>` of one path: the one-path case of [[JsonPaths]]. */
+  def apply(child: Expression, path: String): Expression =
+    GetStructField(JsonPaths(child, Seq(path)), 0)
 
-  @transient private lazy val selectors: Array[Array[JsonField.Segment]] =
-    JsonField.splitSelectors(path)
+  /** A path of one quoted segment: a lookup of the top-level key `key`,
+    * whatever characters it holds. */
+  def quoteKey(key: String): String =
+    "\"" + key.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 
   // length cap keeps `toInt` from overflowing on a >=10-digit numeral:
   // an index that large is out of range of any real array, so it falls
   // through to the object-key/missing-path branch like any other miss
   // (never an uncaught NumberFormatException crashing the task)
-  private def isIndex(seg: JsonField.Segment): Boolean =
+  private def isIndex(seg: Segment): Boolean =
     !seg.quoted && seg.text.nonEmpty && seg.text.length <= 9 &&
       seg.text.forall(c => c >= '0' && c <= '9')
 
-  private def isSliceSeg(seg: JsonField.Segment): Boolean =
-    !seg.quoted && JsonField.isSlice(seg.text)
+  private def isSliceSeg(seg: Segment): Boolean =
+    !seg.quoted && isSlice(seg.text)
+
+  /** Whether `seg` looks up an object key on every node: neither an
+    * array index nor a slice (a quoted segment never is). */
+  private[functions] def isKey(seg: Segment): Boolean =
+    !isIndex(seg) && !isSliceSeg(seg)
 
   /** The [lo, hi]-inclusive sub-array of `arr` as a fresh ArrayNode;
     * out-of-range bounds clamp, an inverted range is empty (standard
     * slice behavior — never a miss on an actual array). */
-  private def sliceNode(arr: JsonNode, seg: JsonField.Segment): JsonNode = {
-    val (lo, hiOpt) = JsonField.sliceBounds(seg.text)
+  private def sliceNode(arr: JsonNode, seg: Segment): JsonNode = {
+    val (lo, hiOpt) = sliceBounds(seg.text)
     val out = JsonPayload.mapper.createArrayNode()
     var i = lo
     val end = math.min(hiOpt.map(_ + 1).getOrElse(arr.size), arr.size)
@@ -244,15 +233,17 @@ case class JsonField(child: Expression, path: String) extends UnaryExpression {
     * a quoted segment against an array, which is a forced key lookup and
     * arrays have no keys; a slice against a non-array is likewise a
     * miss). */
-  private def step(node: JsonNode, seg: JsonField.Segment): JsonNode =
+  private def step(node: JsonNode, seg: Segment): JsonNode =
     if (isSliceSeg(seg)) { if (node.isArray) sliceNode(node, seg) else null }
     else if (node.isArray && isIndex(seg)) node.get(seg.text.toInt)
     else node.get(seg.text)
 
-  /** The node one selector resolves to, or Java null for a miss. A JSON
-    * null leaf comes back as Jackson's NullNode — present, distinct from
-    * a miss (a slice of an array always exists, possibly empty). */
-  private def resolveNode(root: JsonNode, segs: Array[JsonField.Segment]): JsonNode = {
+  /** The node one selector resolves to from `root` (`root` itself for no
+    * segments), or Java null for a miss. A JSON null leaf comes back as
+    * Jackson's NullNode — present, distinct from a miss (a slice of an
+    * array always exists, possibly empty). */
+  def resolve(root: JsonNode, segs: Array[Segment]): JsonNode = {
+    if (segs.isEmpty) return root
     var node: JsonNode = root
     var i = 0
     while (node != null && i < segs.length - 1) {
@@ -269,39 +260,84 @@ case class JsonField(child: Expression, path: String) extends UnaryExpression {
     } else null
   }
 
-  def convert(u: UTF8String): InternalRow = {
-    var exists = false
-    var raw: UTF8String = null
-    if (u != null) {
-      val root =
-        try JsonPayload.mapper.readTree(u.toString)
-        catch { case _: Exception => null }
-      if (root != null) {
-        if (selectors.length == 1) {
-          val n = resolveNode(root, selectors(0))
-          if (n != null) { exists = true; raw = JsonPayload.valueText(n) }
-        } else {
-          // multi-selection: the array of every selector's value, or a
-          // miss as soon as any selector fails (jql walker semantics)
-          val arr = JsonPayload.mapper.createArrayNode()
-          var ok = true
-          var i = 0
-          while (ok && i < selectors.length) {
-            val n = resolveNode(root, selectors(i))
-            if (n == null) ok = false else { arr.add(n); i += 1 }
-          }
-          if (ok) { exists = true; raw = JsonPayload.valueText(arr) }
-        }
+  /** A whole path over a parsed document: the one selector's node, or
+    * for multi-selection the array of every selector's value — a miss
+    * (null) as soon as any selector fails (jql walker semantics). */
+  def lookup(root: JsonNode, selectors: Array[Array[Segment]]): JsonNode =
+    if (selectors.length == 1) resolve(root, selectors(0))
+    else {
+      val arr = JsonPayload.mapper.createArrayNode()
+      var i = 0
+      while (i < selectors.length) {
+        val n = resolve(root, selectors(i))
+        if (n == null) return null
+        arr.add(n); i += 1
       }
+      arr
     }
-    InternalRow(exists, raw)
-  }
+}
+
+/** `struct<p0: struct<exists, raw>, p1: …>`: every path of `paths`
+  * resolved over the JSON payload in ONE streaming pass, `p<i>` for
+  * `paths(i)`. `raw` follows get_json_object semantics (null for JSON
+  * null or missing), `exists` tells the two apart.
+  *
+  * Path grammar ([[JsonField.splitSelectors]]): dot-separated segments; a
+  * purely NUMERIC unquoted segment indexes into an array (`a.0.b` — the
+  * jql crate's array access the reference routes `-c` paths through,
+  * its `src/consume.rs:311-443`); an unquoted `[lo:hi]` segment slices
+  * an array with jql's inclusive bounds (`a.[1:2]`, the serialized
+  * sub-array; traversal can continue into it); a QUOTED segment is always
+  * a key lookup and may contain dots (`meta."a.b"`, the jql quoted
+  * selector). Against an OBJECT a numeric segment is an ordinary key
+  * lookup (JSON keys can be "0"); an out-of-range index, an index into
+  * a non-array, or a slice of a non-array is a missing path, same as an
+  * absent key. A top-level unquoted `,` separates SELECTORS (jql
+  * multi-selection): `a,b.c` yields the JSON array of every selector's
+  * value — strings re-quoted, containers nested, JSON null as a null
+  * element — and ANY selector missing makes the whole path a miss.
+  *
+  * The result is defined as `JsonField.lookup` over the whole document
+  * `mapper.readTree(payload.toString)`, then `JsonPayload.valueText`; a
+  * payload that does not parse misses every path. The pass computes that
+  * without the whole tree: Jackson's streaming parser reads the payload's
+  * UTF-8 bytes once, walking a trie of the paths' key segments built at
+  * bind time, and skips every subtree no path asks for. A tree is built
+  * only for a subtree where a path ends on a container or a float (their
+  * text is the tree's serialization), or continues with an index, a
+  * slice or multi-selection; the rest of such paths resolves on that
+  * subtree with the same resolver. Byte-identical to the whole-document
+  * parse, which the differential property test in JsonFieldSpec checks:
+  *   - a repeated key replaces everything found under its earlier
+  *     occurrence (the tree's last-wins);
+  *   - content after the root value is never read (readTree ignores it);
+  *   - skipped floats are still checked for an exponent BigDecimal cannot
+  *     hold, which fails the tree parse;
+  *   - payloads that are not valid UTF-8 (the tree parse decodes them with
+  *     U+FFFD replacement) or that Jackson's byte reader could take for
+  *     another encoding (a zero byte in the first four, a leading BOM
+  *     byte) are read from their decoded string instead.
+  * One bound differs: a string longer than Jackson's 20M-character limit
+  * inside a skipped subtree is not materialized, so it is not refused. */
+case class JsonPaths(child: Expression, paths: Seq[String]) extends UnaryExpression {
+  require(paths.nonEmpty, "JsonPaths needs at least one path")
+  // bind-time grammar validation: a malformed path fails the query at
+  // construction with the named error, not mid-task on an executor
+  paths.foreach(JsonField.splitSelectors)
+
+  override def dataType: DataType = StructType(paths.indices.map(i =>
+    StructField(s"p$i", JsonField.ResultType, nullable = false)))
+  override def nullable: Boolean = false
+
+  @transient private lazy val trie = new JsonPaths.Trie(paths)
+
+  def convert(u: UTF8String): InternalRow = trie(u)
 
   override def eval(input: InternalRow): Any =
     convert(child.eval(input).asInstanceOf[UTF8String])
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("jsonField", this, classOf[JsonField].getName)
+    val ref = ctx.addReferenceObj("jsonPaths", this, classOf[JsonPaths].getName)
     val childGen = child.genCode(ctx)
     val code =
       code"""
@@ -311,6 +347,240 @@ case class JsonField(child: Expression, path: String) extends UnaryExpression {
     ev.copy(code = code, isNull = FalseLiteral)
   }
 
-  override protected def withNewChildInternal(newChild: Expression): JsonField =
+  override protected def withNewChildInternal(newChild: Expression): JsonPaths =
     copy(child = newChild)
+}
+
+object JsonPaths {
+  import JsonField.Segment
+  import JsonToken._
+
+  private val TrueText = UTF8String.fromString("true")
+  private val FalseText = UTF8String.fromString("false")
+
+  /** One selector to resolve: its result slot, the segments left below
+    * the trie node holding it, and whether the slot keeps the value as a
+    * node (a multi-selection element) rather than as text. */
+  private final case class Req(slot: Int, rest: Array[Segment], asNode: Boolean)
+
+  /** A position reached from the root through object keys only. */
+  private final class Node {
+    val children = new java.util.HashMap[String, Node]()
+    /** Selectors whose key prefix ends here. */
+    var here: Array[Req] = Array.empty
+    /** Every selector at or below this node, with its segments relative
+      * to it — what a tree built here must resolve. */
+    var below: Array[Req] = Array.empty
+    /** Some selector here takes the value's text directly. */
+    var textHere = false
+    /** Some selector here needs the value as a tree. */
+    var treeHere = false
+  }
+
+  private[functions] final class Trie(paths: Seq[String]) {
+    private val selectors = paths.map(JsonField.splitSelectors).toArray
+    /** Result slots of each path's selectors. */
+    private val slots: Array[Array[Int]] = {
+      var next = 0
+      selectors.map(_.map { _ => next += 1; next - 1 })
+    }
+    private val nSlots = slots.map(_.length).sum
+    private val root = new Node
+
+    for (p <- selectors.indices; s <- selectors(p).indices) {
+      val segs = selectors(p)(s)
+      val asNode = selectors(p).length > 1
+      var node = root
+      var d = 0
+      node.below :+= Req(slots(p)(s), segs, asNode)
+      while (d < segs.length && JsonField.isKey(segs(d))) {
+        node = node.children.computeIfAbsent(segs(d).text, _ => new Node)
+        d += 1
+        node.below :+= Req(slots(p)(s), segs.drop(d), asNode)
+      }
+      val req = Req(slots(p)(s), segs.drop(d), asNode)
+      node.here :+= req
+      if (req.rest.isEmpty && !asNode) node.textHere = true else node.treeHere = true
+    }
+
+    def apply(u: UTF8String): InternalRow = {
+      val run = new Run(nSlots)
+      if (u != null) {
+        var p: JsonParser = null
+        try {
+          p = parser(u)
+          val t = p.nextToken()
+          if (t != null) run.value(p, t, root)
+        } catch {
+          // a payload that does not parse misses every path
+          case _: Exception => run.clear()
+        } finally if (p != null) p.close()
+      }
+      val out = new Array[Any](selectors.length)
+      var i = 0
+      while (i < out.length) {
+        out(i) = run.result(slots(i))
+        i += 1
+      }
+      new GenericInternalRow(out)
+    }
+  }
+
+  /** Per-row state: what each slot found. */
+  private final class Run(n: Int) {
+    private val found = new Array[Boolean](n)
+    private val text = new Array[UTF8String](n)
+    private val node = new Array[JsonNode](n)
+
+    def clear(): Unit = {
+      java.util.Arrays.fill(found, false)
+      java.util.Arrays.fill(text.asInstanceOf[Array[AnyRef]], null)
+      java.util.Arrays.fill(node.asInstanceOf[Array[AnyRef]], null)
+    }
+
+    private def reset(reqs: Array[Req]): Unit = {
+      var i = 0
+      while (i < reqs.length) {
+        val s = reqs(i).slot
+        found(s) = false; text(s) = null; node(s) = null
+        i += 1
+      }
+    }
+
+    private def fromTree(tree: JsonNode, reqs: Array[Req]): Unit = {
+      var i = 0
+      while (i < reqs.length) {
+        val r = reqs(i)
+        val hit = JsonField.resolve(tree, r.rest)
+        if (hit != null) {
+          found(r.slot) = true
+          if (r.asNode) node(r.slot) = hit else text(r.slot) = JsonPayload.valueText(hit)
+        }
+        i += 1
+      }
+    }
+
+    /** Consume the value starting at token `t`, which sits at trie node `n`. */
+    def value(p: JsonParser, t: JsonToken, n: Node): Unit =
+      if (n.treeHere ||
+        (n.textHere && (t == START_OBJECT || t == START_ARRAY || t == VALUE_NUMBER_FLOAT)))
+        fromTree(JsonPayload.mapper.readTree[JsonNode](p), n.below)
+      else if (t == START_OBJECT && !n.children.isEmpty) fields(p, n)
+      else {
+        if (n.textHere) {
+          val s = scalarText(p, t)
+          var i = 0
+          while (i < n.here.length) {
+            found(n.here(i).slot) = true; text(n.here(i).slot) = s
+            i += 1
+          }
+        }
+        skip(p, t)
+      }
+
+    /** The fields of an object, up to and including its END_OBJECT. A key
+      * seen again resets what its earlier occurrence found: last wins. */
+    private def fields(p: JsonParser, n: Node): Unit = {
+      var name = p.nextFieldName()
+      while (name != null) {
+        val c = n.children.get(name)
+        val t = p.nextToken()
+        if (c == null) skip(p, t) else { reset(c.below); value(p, t, c) }
+        name = p.nextFieldName()
+      }
+    }
+
+    def result(sl: Array[Int]): InternalRow =
+      if (sl.length == 1) InternalRow(found(sl(0)), text(sl(0)))
+      else {
+        val arr = JsonPayload.mapper.createArrayNode()
+        var i = 0
+        while (i < sl.length && found(sl(i))) { arr.add(node(sl(i))); i += 1 }
+        if (i < sl.length) InternalRow(false, null)
+        else InternalRow(true, JsonPayload.valueText(arr))
+      }
+  }
+
+  /** Text of a scalar that is not a float, as its tree node would print:
+    * an integer's canonical decimal (`-0` is `0`), a string decoded. */
+  private def scalarText(p: JsonParser, t: JsonToken): UTF8String = t match {
+    case VALUE_STRING => UTF8String.fromString(p.getText)
+    case VALUE_NUMBER_INT =>
+      val s = p.getText
+      UTF8String.fromString(if (s == "-0") "0" else s)
+    case VALUE_TRUE  => TrueText
+    case VALUE_FALSE => FalseText
+    case _           => null
+  }
+
+  /** Consume the value starting at token `t` without building anything. */
+  private def skip(p: JsonParser, t: JsonToken): Unit =
+    if (t == VALUE_NUMBER_FLOAT) checkFloat(p)
+    else if (t == START_OBJECT || t == START_ARRAY) {
+      var depth = 1
+      while (depth > 0) {
+        val x = p.nextToken()
+        if (x == null) throw new java.io.EOFException("unclosed container")
+        if (x == START_OBJECT || x == START_ARRAY) depth += 1
+        else if (x == END_OBJECT || x == END_ARRAY) depth -= 1
+        else if (x == VALUE_NUMBER_FLOAT) checkFloat(p)
+      }
+    }
+
+  /** The tree parse converts every float to BigDecimal, which refuses an
+    * exponent beyond Int range (and the document with it). Only a token
+    * of 12 or more characters with an exponent can carry one. */
+  private def checkFloat(p: JsonParser): Unit =
+    if (p.getTextLength >= 12) {
+      val cs = p.getTextCharacters
+      val end = p.getTextOffset + p.getTextLength
+      var i = p.getTextOffset
+      while (i < end && cs(i) != 'e' && cs(i) != 'E') i += 1
+      if (i < end) p.getDecimalValue
+    }
+
+  /** A parser over the payload's bytes where they decode exactly like
+    * `u.toString`, else over that string. */
+  private def parser(u: UTF8String): JsonParser = {
+    val n = u.numBytes
+    val (bytes, off) = u.getBaseObject match {
+      case a: Array[Byte] => (a, (u.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt)
+      case _              => (u.getBytes, 0)
+    }
+    if (plainUtf8(bytes, off, n)) JsonPayload.mapper.getFactory.createParser(bytes, off, n)
+    else JsonPayload.mapper.getFactory.createParser(u.toString)
+  }
+
+  /** Well-formed UTF-8 (the JDK decoder's rules: no overlongs, no
+    * surrogates, nothing above U+10FFFF) that Jackson's encoding
+    * detection reads as UTF-8: no zero byte among the first four, no
+    * leading 0xEF (a UTF-8 BOM is skipped by the byte reader only). */
+  private def plainUtf8(b: Array[Byte], off: Int, len: Int): Boolean = {
+    val end = off + len
+    var i = off
+    while (i < end && i < off + 4) { if (b(i) == 0) return false; i += 1 }
+    if (len > 0 && (b(off) & 0xFF) == 0xEF) return false
+    i = off
+    while (i < end) {
+      val c = b(i)
+      if (c >= 0) i += 1
+      else {
+        val x = c & 0xFF
+        if (x < 0xC2 || x > 0xF4) return false
+        val need = if (x < 0xE0) 1 else if (x < 0xF0) 2 else 3
+        if (i + need >= end) return false
+        val b1 = b(i + 1) & 0xFF
+        val lo = if (x == 0xE0) 0xA0 else if (x == 0xF0) 0x90 else 0x80
+        val hi = if (x == 0xED) 0x9F else if (x == 0xF4) 0x8F else 0xBF
+        if (b1 < lo || b1 > hi) return false
+        var k = 2
+        while (k <= need) {
+          if ((b(i + k) & 0xC0) != 0x80) return false
+          k += 1
+        }
+        i += need + 1
+      }
+    }
+    true
+  }
 }

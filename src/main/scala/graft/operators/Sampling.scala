@@ -191,12 +191,22 @@ object Sampling {
       .select(col("id"), col("__tgt"),
         (conv(substring(md5(col("__gram")), 1, 8), 16, 10).cast("long")
           % buckets).as("__b"))
-    def scoresOf(grams: DataFrame) = {
+    // (__b, score_micro) for every bucket `stats` covers; `domain` widens
+    // the table to all `buckets` buckets, a bucket without stats scored
+    // as ct = cr = 0 — the model's smoothed unseen-bucket score
+    def scoresOf(grams: DataFrame, domain: Boolean = false) = {
       val stats = grams.groupBy("__b").agg(
         sum(when(col("__tgt"), 1L).otherwise(0L)).as("ct"),
         count(lit(1)).as("cr"))
-      val totals = stats.agg(sum("ct").as("tt"), sum("cr").as("tr"))
-      stats.crossJoin(broadcast(totals))
+      val totals = stats.agg(coalesce(sum("ct"), lit(0L)).as("tt"),
+        coalesce(sum("cr"), lit(0L)).as("tr"))
+      val covered =
+        if (!domain) stats
+        else df.sparkSession.range(buckets).select(col("id").as("__b"))
+          .join(broadcast(stats), Seq("__b"), "left_outer")
+          .select(col("__b"), coalesce(col("ct"), lit(0L)).as("ct"),
+            coalesce(col("cr"), lit(0L)).as("cr"))
+      covered.crossJoin(broadcast(totals))
         .select(col("__b"),
           round((log(col("ct") + 1) - log(col("tt") + buckets)
                - log(col("cr") + 1) + log(col("tr") + buckets)) * 1e6)
@@ -212,8 +222,10 @@ object Sampling {
     // (which is why the default stays 16 = exact), but the DSIR paper's
     // contract (hashed-multinomial importance weights) is already
     // statistical, so production at corpus scale should prefer this mode.
+    // A bucket the sample never saw still scores (the smoothed ct = cr = 0
+    // score against the sampled totals), so no gram and no doc drops out.
     if (statsSixteenths < 16) {
-      val scores = scoresOf(gramsOf(hashSample(df, idCol, statsSixteenths)))
+      val scores = scoresOf(gramsOf(hashSample(df, idCol, statsSixteenths)), domain = true)
       return gramsOf(df).join(broadcast(scores), "__b")
         .groupBy("id").agg(sum("score_micro").as("weight_micro"))
     }

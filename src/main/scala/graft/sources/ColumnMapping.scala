@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -37,7 +37,7 @@ object MappedType {
   *
   * The reference evaluates the path with the `jql` crate per record
   * (`/root/reference/src/consume.rs:311-443`); we compile the same semantics
-  * once into Catalyst expressions (`get_json_object` + casts + `coalesce`),
+  * once into Catalyst expressions (the native JsonPaths decode + casts),
   * which whole-stage-codegen then runs over the scan — no per-record
   * interpreter.
   *
@@ -62,35 +62,23 @@ final case class ColumnMapping(name: String, ty: MappedType, path: String) {
     * "error as value" quirk for VARCHAR columns. */
   def missingPathError: String = s"""Node "$path" not found"""
 
-  /** Compile this mapping into a Column over the JSON payload `value`.
-    * One native [[graft.functions.JsonField]] parse yields the value text
-    * (get_json_object semantics) AND path existence in a single pass —
-    * the get_json_object / json_object_keys built-ins it replaces are
-    * CodegenFallback (interpreted inside codegen'd stages) and degrade
-    * pathologically in long-lived JVMs. */
+  /** Compile this mapping into a Column over the JSON payload `value`:
+    * one native [[graft.functions.JsonPaths]] pass for this path alone
+    * yields the value text (get_json_object semantics) AND path
+    * existence. A consume with several mappings decodes them all in one
+    * pass instead ([[ColumnMapping.project]]). */
   def toColumn(value: Column): Column = {
     import org.apache.spark.sql.graft.shim
-    val info = shim.column(
-      graft.functions.JsonField(shim.expression(value), path))
-    buildTyped(info.getField("raw"), info.getField("exists"))
+    fromResult(shim.column(graft.functions.JsonField(shim.expression(value), path)))
   }
 
-  /** Compile this mapping against a pre-parsed `map<string,string>` of the
-    * payload (see [[ColumnMapping.parsed]]) — top-level paths only. The
-    * map gives existence (map_contains_key) and the extracted text in one
-    * JSON parse per ROW instead of ~3 per mapped column: nested
-    * values/arrays arrive as their JSON text, scalars as their bare text,
-    * exactly like get_json_object. Falls back to [[toColumn]] for nested
-    * dotted paths, purely numeric ones (a top-level array payload indexes
-    * through JsonField; the object map can't represent it), quoted
-    * paths (the quote grammar lives in JsonField.splitSelectors — the raw
-    * path text is not the key), AND comma paths (multi-selection). */
-  def toColumnFromParsed(parsed: Column, value: Column): Column =
-    if (path.contains('.') || path.contains('"') || path.contains(',') ||
-      path.forall(c => c >= '0' && c <= '9') ||
-      graft.functions.JsonField.isSlice(path))
-      toColumn(value)
-    else buildTyped(element_at(parsed, path), map_contains_key(parsed, lit(path)))
+  /** Same as [[toColumn]]. `parsed` is not read; the signature stays for
+    * callers written against the former map-parse decode. */
+  def toColumnFromParsed(parsed: Column, value: Column): Column = toColumn(value)
+
+  /** This mapping's typed column from its path's `struct<exists, raw>`. */
+  private def fromResult(r: Column): Column =
+    buildTyped(r.getField("raw"), r.getField("exists"))
 
   private def buildTyped(raw: Column, exists: Column): Column = {
     val isJsonNull = exists && raw.isNull
@@ -122,13 +110,25 @@ final case class ColumnMapping(name: String, ty: MappedType, path: String) {
 
 object ColumnMapping {
 
-  /** One-shot parse of the JSON payload into map<string,string> — shared
-    * by every top-level mapping of a scan. Kept in its own projection by
-    * Catalyst (CollapseProject does not inline non-cheap, multiply
-    * referenced aliases), so the payload is parsed once per row. Native
-    * [[graft.functions.JsonToMap]], not `from_json`: JsonToStructs is
-    * CodegenFallback and its interpreted eval degrades in long-lived JVMs
-    * (3 s → 220 s measured on an identical query). */
+  /** `df`'s records projected to `keep` followed by `mappings`' typed
+    * columns, every mapping decoded from `value` in ONE
+    * [[graft.functions.JsonPaths]] pass per record (a path shared by two
+    * mappings is resolved once). The pass sits in its own projection and
+    * stays there: CollapseProject does not inline a non-cheap expression
+    * the next projection references more than once, and every typed
+    * column reads its result at least twice (pinned in PlanAuditSpec). */
+  def project(df: DataFrame, mappings: Seq[ColumnMapping], keep: Column*): DataFrame = {
+    import org.apache.spark.sql.graft.shim
+    val paths = mappings.map(_.path).distinct
+    val decoded = df.withColumn("__paths",
+      shim.column(graft.functions.JsonPaths(shim.expression(col("value")), paths)))
+    decoded.select(keep ++ mappings.map(m =>
+      m.fromResult(col("__paths").getField(s"p${paths.indexOf(m.path)}"))): _*)
+  }
+
+  /** `map<string,string>` of the payload's top-level fields (native
+    * [[graft.functions.JsonToMap]]). No consume path decodes through it
+    * any more; kept for callers outside the consume grammar. */
   def parsed(value: Column): Column = {
     import org.apache.spark.sql.graft.shim
     shim.column(graft.functions.JsonToMap(shim.expression(value)))

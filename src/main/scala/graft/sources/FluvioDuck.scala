@@ -335,10 +335,9 @@ object FluvioDuck {
     * face and the file-source fallback (extracted r14 so the faces cannot
     * drift — identical plan shape over either scan).
     *
-    * Projection: default record columns or -c mappings (columns_mappings,
-    * /root/reference/src/consume.rs:607-637). With mappings, the payload
-    * is parsed ONCE per row into map<string,string> (ColumnMapping.parsed)
-    * and every top-level mapping reads from it.
+    * Projection: default record columns or -c mappings (the reference's
+    * columns_mappings, src/consume.rs:607-637). With mappings, one
+    * streaming pass per row decodes every mapping (ColumnMapping.project).
     *
     * Ordering: record order WITHIN each partition (the log order users see
     * from a consume). sortWithinPartitions, not orderBy: parquet row order
@@ -353,9 +352,7 @@ object FluvioDuck {
       if (opt.columns.isEmpty)
         capped.select(col("offset"), col("timestamp"), col("value"))
       else {
-        val withParsed = capped.withColumn("__parsed", ColumnMapping.parsed(col("value")))
-        val mapped = opt.columns.map(_.toColumnFromParsed(col("__parsed"), col("value")))
-        withParsed.select(col("offset").as("__offset") +: mapped: _*)
+        ColumnMapping.project(capped, opt.columns, col("offset").as("__offset"))
       }
     val ordered = projected
       .sortWithinPartitions(col(if (opt.columns.isEmpty) "offset" else "__offset"))

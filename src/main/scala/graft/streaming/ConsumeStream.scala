@@ -90,7 +90,7 @@ object ConsumeStream {
       } else applyChain(ended)
 
     if (opt.columns.isEmpty) capped
-    else capped.select(opt.columns.map(_.toColumn(col("value"))): _*)
+    else ColumnMapping.project(capped, opt.columns)
   }
 
   /** Exact post-transform `--rows` cap for a continuous read: a running

@@ -2,6 +2,8 @@ package graft.transforms
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shim
+import graft.functions.JsonField
 
 /** Registry of named record-view transforms — the Spark analog of the
   * reference's server-side SmartModule WASM registry
@@ -68,8 +70,9 @@ object TransformRegistry {
       throw new IllegalArgumentException("filter-json-eq requires `key` param"))
     val v = params.getOrElse("value",
       throw new IllegalArgumentException("filter-json-eq requires `value` param"))
-    // single from_json parse (get_json_object re-parses per call in Spark 4)
-    df.filter(graft.sources.ColumnMapping.parsed(col("value")).getItem(key) === v)
+    // one streaming pass that skips everything but the key's value
+    val field = JsonField(shim.expression(col("value")), JsonField.quoteKey(key))
+    df.filter(shim.column(field).getField("raw") === v)
   }
 
   /** graft/map-uppercase: uppercase the raw value — a trivial map-type

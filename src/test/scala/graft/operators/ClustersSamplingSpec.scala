@@ -178,4 +178,31 @@ class ClustersSamplingSpec extends SparkSpec {
     assert(w1 == w2)
     assert(w1.keySet == (0L until 40L).toSet)
   }
+
+  test("dsirWeights sampled-stats mode: buckets the sample never saw keep " +
+      "the smoothed score, so every doc keeps a weight") {
+    // six docs inside the hashSample(_, 4) slice train the stats; six
+    // outside it speak words the slice never saw. With 2^20 buckets their
+    // grams land in buckets with no stats: each occurrence scores the
+    // smoothed unseen-bucket value ln((tr+B)/(tt+B)), quantized
+    val (inside, outside) = spark.range(0, 400)
+      .select(col("id"), Sampling.hashBucket(col("id")).as("b"))
+      .collect().map(r => (r.getLong(0), r.getInt(1))).partition(_._2 < 4)
+    val trained = inside.take(6).map(_._1).zipWithIndex.map { case (id, i) =>
+      (id, Seq("alpha beta gamma", "beta gamma", "gamma delta epsilon")(i % 3), i % 2 == 0)
+    }
+    val unseen = outside.take(6).map(_._1).map(id => (id, s"novel$id unseen$id", false))
+    val df = (trained ++ unseen).toSeq.toDF("doc_id", "text", "is_tgt")
+    val buckets = 1 << 20
+    val w = Sampling.dsirWeights(df, "doc_id", "text", "is_tgt", buckets = buckets,
+        statsSixteenths = 4)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(w.keySet == (trained ++ unseen).map(_._1).toSet, w.toString)
+    // n words make n unigrams + (n - 1) bigrams
+    def grams(t: String): Int = 2 * t.split(' ').length - 1
+    val tr = trained.map(d => grams(d._2)).sum
+    val tt = trained.filter(_._3).map(d => grams(d._2)).sum
+    val unseenMicro = math.round((math.log(tr + buckets) - math.log(tt + buckets)) * 1e6)
+    for ((id, _, _) <- unseen) assert(w(id) == 3 * unseenMicro, s"doc $id: ${w(id)}")
+  }
 }

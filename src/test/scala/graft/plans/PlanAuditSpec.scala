@@ -504,4 +504,64 @@ class PlanAuditSpec extends SparkSpec {
     assert(plan.contains("embeddings.parquet"), plan)
     assert(!plan.contains("lineitem.parquet"), plan)
   }
+
+  /** The optimized plan `df` runs with: a batch frame's own, a streaming
+    * frame's from one micro-batch run to completion. */
+  private def optimized(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+    if (!df.isStreaming) df.queryExecution.optimizedPlan
+    else {
+      val q = df.writeStream.format("memory").queryName(s"pin_${System.nanoTime()}").start()
+      try {
+        q.processAllAvailable()
+        q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+          .streamingQuery.lastExecution.optimizedPlan
+      } finally q.stop()
+    }
+
+  /** Every expression of `cls` anywhere in `plan`. */
+  private def exprs[T](plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+                       cls: Class[T]): Seq[T] =
+    plan.collect { case p => p.expressions }.flatten
+      .flatMap(_.collect { case e if cls.isInstance(e) => cls.cast(e) })
+
+  /** The `-d` plan of `cmd` over 20 in-memory records. */
+  private def continuous(cmd: String): DataFrame = {
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val in = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, java.sql.Timestamp, String)]
+    in.addData((0L until 20L).map(i => (i, new java.sql.Timestamp(1700000000000L + i),
+      s"""{"k": ${i % 7}, "meta": {"x": $i}}""")))
+    graft.streaming.ConsumeStream.fromRecords(in.toDS().toDF("event_id", "ts", "props"),
+      graft.sources.ConsumeOpt.parse(cmd).toOption.get, "event_id", "ts", "props")
+  }
+
+  test("-c mappings decode in ONE JsonPaths pass per record, batch face and -d") {
+    // top-level, nested and overlapping mappings (a path shared by two
+    // mappings is one path of the pass); CollapseProject must not inline
+    // the pass into every field access, which would bring back k parses
+    val cmd = "-c k:i=k -c ks:s=k -c m:s=meta -c mx:s=meta.x -c f:d=0"
+    val batch = graft.sources.FluvioDuck.consume(spark, s"events -B --rows 5 $cmd", sf)
+    val stream = continuous(s"events -d -B $cmd")
+    for (df <- Seq(batch, stream)) {
+      val plan = optimized(df)
+      val passes = exprs(plan, classOf[graft.functions.JsonPaths])
+      assert(passes.map(_.paths) == Seq(Seq("k", "meta", "meta.x", "0")), plan)
+      assert(exprs(plan, classOf[graft.functions.JsonToMap]).isEmpty, plan)
+    }
+    assert(batch.collect().length == 5)
+  }
+
+  test("filter-json-eq plans exactly one JsonPaths pass and no map parse") {
+    val params = Map("key" -> "k", "value" -> "5")
+    val batch = graft.transforms.TransformRegistry("graft/filter-json-eq")(
+      graft.sources.FluvioDuck.consume(spark, "events -B", sf), params)
+    val stream = continuous("events -d -B --smartmodule graft/filter-json-eq -e key=k -e value=5")
+    for (df <- Seq(batch, stream)) {
+      val plan = optimized(df)
+      assert(exprs(plan, classOf[graft.functions.JsonPaths]).map(_.paths) ==
+        Seq(Seq("\"k\"")), plan)
+      assert(exprs(plan, classOf[graft.functions.JsonToMap]).isEmpty, plan)
+    }
+  }
 }
