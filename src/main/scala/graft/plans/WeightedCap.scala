@@ -1,66 +1,74 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** "First rows in key order until a cumulative WEIGHT budget" without the
-  * global sort + full-set window funnel — [[OrderedCap]]'s block-bucket
-  * architecture generalized from row counts to weights.
+  * global sort + full-set window funnel. The one cap implementation:
+  * [[OrderedCap]] is its unit-weight case.
   *
   * The naive form (`sum(weight) over (order by key)` then filter) moves
-  * every row through ONE partition — the same scale cliff OrderedCap
-  * exists to avoid, now for weighted budgets (token budgets, byte
-  * budgets). Instead:
+  * every row through ONE partition — the scale cliff for token budgets,
+  * byte budgets and `--rows 100000000` over a 100 TB log. This reads the
+  * input twice instead:
   *
-  *   1. bucket rows by coarse key block;
-  *   2. aggregate per-block WEIGHT SUMS (map-side combine) and take the
-  *      running total over the metadata-sized block table — the only
-  *      single-partition step ranks #blocks rows;
-  *   3. blocks that fit entirely under the budget pass through where
-  *      they sit; ONLY the boundary block (≤ blockSize rows) is ranked
-  *      row-by-row to fill the remainder.
+  *   1. counting pass: per-block weight sums (block =
+  *      `floor(key / blockSize)`, map-side combined), then the
+  *      metadata-sized block table folds into one row per group — the
+  *      first block whose running total reaches the budget (NULL = keep
+  *      everything) and the weight before it — with one
+  *      `sort_array(collect_list)` + `aggregate`, no self-join;
+  *   2. main pass: that row, broadcast, joins the input once; rows of
+  *      blocks after the cut drop, the rest cross ONE shuffle by
+  *      (group, block), where a running sum fills the remainder of the
+  *      cut block (other blocks pass whole).
   *
-  * A row is kept iff the cumulative weight BEFORE it (in `key` order) is
-  * < `budget` — the greedy "fill until the budget is reached" rule, so
-  * the budget may be overshot by at most the final row's weight, and a
-  * zero-or-negative budget keeps nothing. Weights must be non-negative;
-  * `key` must be unique for a deterministic fill order (encode composite
+  * Kept rows (≤ the budget's rows plus one block) are shuffled; no step
+  * puts data rows into a single partition.
+  *
+  * A row is kept iff the cumulative weight BEFORE it (in `key` order,
+  * within its `groups` values) is < `budget` — the greedy "fill until the
+  * budget is reached" rule, so the budget may be overshot by at most the
+  * final row's weight, and a zero-or-negative budget keeps nothing.
+  * Weights must be non-negative and non-null; `key` must be non-null and
+  * unique within a group for a deterministic fill order (encode composite
   * orders into one numeric key).
   */
 object WeightedCap {
 
   def byKey(df: DataFrame, key: String, weightCol: String, budget: Long,
-            blockSize: Long = 1L << 20): DataFrame = {
+            blockSize: Long = 1L << 20, groups: Seq[String] = Nil): DataFrame =
+    cap(df, key, col(weightCol), budget, blockSize, groups)
+
+  private[plans] def cap(df: DataFrame, key: String, weight: Column, budget: Long,
+                         blockSize: Long, groups: Seq[String]): DataFrame = {
     require(blockSize > 0, "blockSize must be positive")
     if (budget <= 0) return df.limit(0)
-    val t = df.withColumn("__blk", floor(col(key) / blockSize))
-    val sums = t.groupBy("__blk").agg(sum(weightCol).as("__w"))
-    // running block-weight totals over the metadata-sized block table
-    // (deliberately single-partition: #blocks rows, not data rows)
-    val cum = sums.withColumn("__cum",
-      sum("__w").over(Window.partitionBy(lit(0)).orderBy("__blk")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    // first block whose running total reaches the budget (NULL = keep
-    // everything) and the weight consumed before it
-    val info = cum.agg(
-        min(when(col("__cum") >= budget, col("__blk"))).as("__cutBlk"))
-      .crossJoin(cum.select(col("__blk").as("__b"), col("__cum").as("__c")))
-      .groupBy("__cutBlk")
-      .agg(coalesce(max(when(col("__b") < col("__cutBlk"), col("__c"))), lit(0L))
-        .as("__prevCum"))
-    val withInfo = t.crossJoin(broadcast(info))
-    val before = withInfo
-      .filter(col("__cutBlk").isNull || col("__blk") < col("__cutBlk"))
-    // rank ONLY the boundary block; keep rows whose pre-row cumulative
-    // (block prefix + within-block prefix) is still under the budget
-    val boundary = withInfo
-      .filter(col("__blk") === col("__cutBlk"))
-      .withColumn("__wcum",
-        sum(weightCol).over(Window.partitionBy("__blk").orderBy(key)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .filter(col("__prevCum") + col("__wcum") - col(weightCol) < budget)
-      .drop("__wcum")
-    before.unionByName(boundary).drop("__blk", "__cutBlk", "__prevCum")
+    val t = df.withColumn("__blk", floor(col(key) / blockSize)).withColumn("__w", weight)
+    val blocks = t.groupBy((groups :+ "__blk").map(col): _*).agg(sum("__w").as("__bw"))
+    // fold the sorted block table into (cut block, weight before it):
+    // `prev` runs over the blocks until the cut, then stays
+    val sumType = blocks.schema("__bw").dataType
+    def acc(cut: Column, prev: Column) = struct(cut.as("cut"), prev.cast(sumType).as("prev"))
+    val noCut = lit(null).cast(blocks.schema("__blk").dataType)
+    val folded = aggregate(sort_array(collect_list(struct("__blk", "__bw"))), acc(noCut, lit(0)),
+      (s, b) => when(s("cut").isNotNull, s)
+        .when(s("prev") + b("__bw") >= budget, acc(b("__blk"), s("prev")))
+        .otherwise(acc(noCut, s("prev") + b("__bw"))))
+    val info = blocks.groupBy(groups.map(col): _*).agg(folded.as("__cut"))
+      .select(groups.map(col) :+ col("__cut.cut").as("__cutBlk") :+
+        col("__cut.prev").as("__prevCum"): _*)
+    val cut = col("__cutBlk")
+    // groups = Nil: a cross join with the one info row
+    val joined = t.join(broadcast(info), groups)
+    val fill = Window.partitionBy((groups :+ "__blk").map(col): _*).orderBy(key)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // weight before each row of the cut block; NULL for every other kept row
+    joined.filter(cut.isNull || col("__blk") <= cut)
+      .withColumn("__before", when(col("__blk") === cut,
+        col("__prevCum") + sum("__w").over(fill) - col("__w")))
+      .filter(col("__before").isNull || col("__before") < budget)
+      .drop("__blk", "__w", "__cutBlk", "__prevCum", "__before")
   }
 }

@@ -2106,7 +2106,7 @@ object Pipeline {
     // add). Estimate = linear interpolation inside the covering bucket —
     // all-integer until ONE division, so both engines agree exactly.
     // The bucket table is metadata-sized; its running total is the only
-    // (deliberate, tiny) single-partition window — the OrderedCap shape.
+    // (deliberate, tiny) single-partition window over the bucket table.
     "sketch_hist_quantiles" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val hist = docs(s, dir)
@@ -2285,10 +2285,9 @@ object Pipeline {
     // ---- token-budget curriculum head: best-quality docs FIRST until a
     // token budget fills — the "select the top slice worth B tokens"
     // sampling shape. The composite (quality desc, doc_id) order encodes
-    // into ONE numeric key and the fill runs through WeightedCap —
-    // OrderedCap's block-bucket plan generalized to weights, so no
-    // full-set single-partition window exists (only the boundary block
-    // is ranked row-by-row).
+    // into ONE numeric key and the fill runs through WeightedCap — the
+    // block-bucket cap (OrderedCap is its unit-weight case): two reads of
+    // the documents, no full-set single-partition window.
     "sample_token_budget" -> ((s, dir) => {
       val d = docs(s, dir).select(col("doc_id"),
         TextAnalysis.tokenCount(col("text")).cast("long").as("toks"),
@@ -2298,7 +2297,7 @@ object Pipeline {
         (lit(10000L) - col("q_bp")) * (1L << 40) + col("doc_id"))
       graft.plans.WeightedCap.byKey(keyed, "__ord", "toks", budget = 5000L)
         .select("doc_id", "q_bp", "toks")
-        // small output over the multi-pass WeightedCap subtree: skip the
+        // small output over the two-pass WeightedCap subtree: skip the
         // range-sampling pass (see text_fuzzy_pairs)
         .repartition(1).sortWithinPartitions("doc_id")
     }),
@@ -2472,8 +2471,8 @@ object Pipeline {
     // ---- event-rate anomaly detection: hours whose count deviates
     // >= 50% from the trailing-24h mean — the ingest-monitoring panel.
     // The hourly series is a METADATA-sized table (one row per hour), so
-    // its trailing window is deliberately single-partition (the
-    // OrderedCap block-table shape); deviation algebra is integer-micro.
+    // its trailing window is deliberately single-partition (a
+    // metadata-sized table); deviation algebra is integer-micro.
     "events_rate_anomaly" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val hourly = Tables.load(s, dir, "events")

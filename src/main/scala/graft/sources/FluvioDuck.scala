@@ -321,9 +321,11 @@ object FluvioDuck {
         }
       } else {
         // cardinality-changing chain: the cap must count POST-transform
-        // rows in offset order. Block-bucketed counting cap — no global
-        // sort, no single-partition GlobalLimit funnel (see OrderedCap).
-        graft.plans.OrderedCap.byKey(transformed, "offset", opt.rows)
+        // rows in offset order, per partition under `-A`. Block-bucketed
+        // counting cap — no global sort, no single-partition GlobalLimit
+        // funnel (see OrderedCap).
+        graft.plans.OrderedCap.byKey(transformed, "offset", opt.rows,
+          groups = if (multiPart) Seq("__part") else Nil)
       }
     // map-type transforms run AFTER the cap (commutes; see above)
     val capped = if (mapOnlyChain && chain.nonEmpty) applyChain(capped0) else capped0

@@ -27,10 +27,12 @@ import graft.transforms.{TransformChain, TransformRegistry}
   * fill. `-c` mappings and record ordering ride the shared
   * [[FluvioDuck.projectAndOrder]] tail, so the two faces cannot drift.
   *
-  * Under `-A` the `--rows` cap applies PER PARTITION (the file path's
-  * documented divergence — the reference is single-partition,
-  * consume.rs:179, so the multi-partition cap has no reference
-  * semantics; a total-N arrival-order cap would serialize the scan).
+  * Under `-A` the `--rows` cap applies PER PARTITION, in-scan and
+  * post-transform alike (the post-transform cap groups by `partition`).
+  * This is the file path's documented divergence — the reference is
+  * single-partition, consume.rs:179, so the multi-partition cap has no
+  * reference semantics; a total-N arrival-order cap would serialize the
+  * scan.
   * `-d` (continuous) belongs to the streaming face and is rejected.
   */
 object FluvioBatchConsume {
@@ -52,15 +54,15 @@ object FluvioBatchConsume {
       .option("cmd", cmd).option("baseDir", baseDir)
       .option("rowsCap", String.valueOf(mapOnlyChain))
       .load()
-      // canonical record shape (offset, timestamp, value); `partition`
-      // is the DSv2 extra — windowing/capping already happened per
-      // partition inside the source, nothing downstream keys on it
-      .drop("partition")
     val transformed =
       chain.foldLeft(rel) { (d, t) => TransformRegistry(t.uses)(d, t.params) }
+    // `partition` is the DSv2 extra beside (offset, timestamp, value):
+    // the post-transform cap counts per partition under `-A`, where
+    // offsets repeat across partitions; the projection then drops it
     val capped =
       if (mapOnlyChain) transformed
-      else graft.plans.OrderedCap.byKey(transformed, "offset", opt.rows)
+      else graft.plans.OrderedCap.byKey(transformed, "offset", opt.rows,
+        groups = if (opt.allPartitions) Seq("partition") else Nil)
     FluvioDuck.projectAndOrder(capped, opt)
   }
 }

@@ -203,7 +203,7 @@ object Demo {
     graft.SparkEntry.queries("sample_temperature")(spark, sf).show(5, false)
     graft.SparkEntry.queries("sketch_hist_by_source")(spark, sf).show(5, false)
 
-    println("=== token-budget curriculum head (WeightedCap: no global window) ===")
+    println("=== token-budget curriculum head (WeightedCap: two reads, no global window) ===")
     graft.SparkEntry.queries("sample_token_budget")(spark, sf).show(5, false)
 
     println("=== spectral: dominant principal direction (power iteration) ===")

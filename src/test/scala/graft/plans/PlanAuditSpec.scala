@@ -24,6 +24,17 @@ class PlanAuditSpec extends SparkSpec {
   private def q(name: String): DataFrame =
     graft.SparkEntry.queries(name)(spark, sf)
 
+  /** Scan leaves of `df`'s executed plan (run [[finalPlan]] first),
+    * inside AQE query stages and subqueries too (a reused exchange is not
+    * a second read). */
+  private def scans(df: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    object aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    aqe.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }
+  }
+
   test("consume offset window pushes offset bounds into the parquet scan") {
     // r14: `fluvio_consume` routes through the DSv2 batch face, where the
     // `--start 100 --end 299` window resolves BIND-TIME inside the source
@@ -563,5 +574,23 @@ class PlanAuditSpec extends SparkSpec {
         Seq(Seq("\"k\"")), plan)
       assert(exprs(plan, classOf[graft.functions.JsonToMap]).isEmpty, plan)
     }
+  }
+
+  test("--rows over a filter chain: the post-transform cap reads the topic twice, no GlobalLimit") {
+    // one counting pass over the block table, one main pass; the filter
+    // runs once per pass
+    val df = graft.sources.FluvioDuck.consume(spark,
+      "events -B --rows 7 --smartmodule graft/filter-json-eq -e key=k -e value=7", sf)
+    val plan = finalPlan(df)
+    assert(scans(df).count(_.isInstanceOf[
+      org.apache.spark.sql.execution.datasources.v2.BatchScanExec]) == 2, plan)
+    assert(!plan.contains("GlobalLimit"), plan)
+  }
+
+  test("sample_token_budget: the WeightedCap fill reads documents at most twice") {
+    val df = q("sample_token_budget")
+    val plan = finalPlan(df)
+    val docsScans = scans(df).count(_.toString.contains("documents.parquet"))
+    assert(docsScans >= 1 && docsScans <= 2, plan)
   }
 }

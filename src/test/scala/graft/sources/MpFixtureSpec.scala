@@ -128,4 +128,22 @@ class MpFixtureSpec extends SparkSpec {
     assert(readFiles > 0 && readFiles < allFiles,
       s"expected partition pruning: read $readFiles of $allFiles files")
   }
+
+  test("-A with a filter chain caps --rows per partition, on both faces") {
+    // offsets repeat across partitions: a global offset-ordered cap would
+    // keep 2 rows in total, split by arbitrary tie-breaks
+    val cmd = "events_mp -A -B --rows 2 --smartmodule graft/filter-json-eq -e key=k -e value=7"
+    val topic = spark.read.parquet(TopicRegistry.topicPath(base, "events_mp"))
+      .select("offset", "value", "partition")
+    val matches = graft.transforms.TransformRegistry("graft/filter-json-eq")(
+      topic, Map("key" -> "k", "value" -> "7"))
+    val want = matches
+      .withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy("partition").orderBy("offset")))
+      .filter(col("rn") <= 2).select("offset", "value")
+      .collect().map(_.toString).sorted.toSeq
+    assert(want.size > 2, want)
+    for (df <- Seq(FluvioDuck.consume(spark, cmd, base), FluvioDuck.consumeFileSource(spark, cmd, base)))
+      assert(df.select("offset", "value").collect().map(_.toString).sorted.toSeq == want)
+  }
 }
