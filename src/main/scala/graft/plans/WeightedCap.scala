@@ -24,8 +24,13 @@ import org.apache.spark.sql.functions._
   *      (group, block), where a running sum fills the remainder of the
   *      cut block (other blocks pass whole).
   *
-  * Kept rows (≤ the budget's rows plus one block) are shuffled; no step
-  * puts data rows into a single partition.
+  * Every kept row (≤ the budget's rows plus one block) crosses that
+  * shuffle, the rows of blocks before the cut included, and so does every
+  * row when the budget is never reached; no step puts data rows into a
+  * single partition. Output order: each block's rows come out together,
+  * sorted by `key`, but blocks land in hash order across partitions, so a
+  * result spanning several blocks does not come back in `key` order even
+  * from a one-split input — callers needing that order sort.
   *
   * A row is kept iff the cumulative weight BEFORE it (in `key` order,
   * within its `groups` values) is < `budget` — the greedy "fill until the
@@ -38,8 +43,8 @@ import org.apache.spark.sql.functions._
 object WeightedCap {
 
   def byKey(df: DataFrame, key: String, weightCol: String, budget: Long,
-            blockSize: Long = 1L << 20, groups: Seq[String] = Nil): DataFrame =
-    cap(df, key, col(weightCol), budget, blockSize, groups)
+            blockSize: Long = 1L << 20): DataFrame =
+    cap(df, key, col(weightCol), budget, blockSize, Nil)
 
   private[plans] def cap(df: DataFrame, key: String, weight: Column, budget: Long,
                          blockSize: Long, groups: Seq[String]): DataFrame = {

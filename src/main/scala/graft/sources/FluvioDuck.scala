@@ -348,7 +348,11 @@ object FluvioDuck {
     * `fluvio_consume` must not pay a full distributed sort for order the
     * log already has. Splits scan in offset order in practice; a consumer
     * needing a guaranteed TOTAL order across partitions adds its own
-    * orderBy("offset") (documented divergence, SURVEY §4.2). */
+    * orderBy("offset") (documented divergence, SURVEY §4.2). Behind a
+    * filtering chain the `--rows` cap (OrderedCap) hash-shuffles the kept
+    * rows by offset block (2^20 offsets), so when they span several
+    * blocks the partitions here are hash-ordered blocks: each sorted,
+    * but the blocks not in offset order, even for a one-split topic. */
   private[graft] def projectAndOrder(capped: DataFrame, opt: ConsumeOpt): DataFrame = {
     val projected =
       if (opt.columns.isEmpty)

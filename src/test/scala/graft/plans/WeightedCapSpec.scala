@@ -101,7 +101,7 @@ class WeightedCapSpec extends SparkSpec {
       val groups = if (c.grouped) Seq("g") else Nil
       val got =
         if (c.unit) OrderedCap.byKey(df, "k", c.budget, c.blockSize, groups)
-        else WeightedCap.byKey(df, "k", "w", c.budget, c.blockSize, groups)
+        else WeightedCap.cap(df, "k", col("w"), c.budget, c.blockSize, groups)
       val want =
         if (c.unit && !c.grouped) df.orderBy("k").limit(c.budget.toInt)
         else naiveRows(df, "k", if (c.unit) lit(1L) else col("w"), c.budget, groups)
