@@ -54,13 +54,13 @@ object TierA {
   val queries: Map[String, Q] = Map(
     // ---- source scan + default projection
     "consume_scan" -> consume("events -B --rows 500"),
-    // the SAME consume through the DSv2 provider's batch face (r13:
-    // one source, two faces — the Kafka-source shape): offset algebra
-    // inside the source, the --rows range predicate pushed via
-    // SupportsPushDownFilters, columns pruned via the batch planner's
-    // V2ScanRelationPushDown. Hash-matches consume_scan's oracle.
+    // the SAME consume read straight from the `fluvio` DSv2 provider, as
+    // `spark.read.format("fluvio")` users call it, without the consume
+    // wrapper's projection tail: the offset window and the --rows cap
+    // resolve inside the source. Hash-matches consume_scan's oracle.
     "consume_scan_dsv2" -> ((s, dir) =>
-      graft.sources.v2.FluvioBatchConsume.consume(s, "events -B --rows 500", dir)),
+      s.read.format("fluvio").option("cmd", "events -B --rows 500")
+        .option("baseDir", dir).load().select("offset", "timestamp", "value")),
     "consume_default_cols" -> consume("events -H 10 --rows 100"),
     "offset_col" -> ((s, dir) =>
       FluvioDuck.consume(s, "events -B --rows 250", dir).select("offset")),

@@ -54,6 +54,27 @@ final case class ConsumeOpt(
     else if (tail.isDefined) OffsetSpec.FromEnd(tail.get)
     else OffsetSpec.End
 
+  /** The records [from, until) a bounded consume delivers from a partition
+    * whose log ends at `leo`: the start offset of `calculate_offset`
+    * (the reference's `src/consume.rs:580-605`), the inclusive `--end`,
+    * then the first `--rows` records of that window (offsets are dense, so
+    * the cap is `until <= from + rows`). `--end` and `--rows` saturate at
+    * `Long.MaxValue`, so their largest values mean "no bound". The window
+    * is empty when `until <= from`. The one place this arithmetic lives:
+    * the DSv2 batch planner, the micro-batch stream's start and ends, and
+    * the `-d` plan all call it. */
+  def window(leo: Long): (Long, Long) = {
+    val from = startOffset match {
+      case OffsetSpec.FromBeginning(n) => n
+      case OffsetSpec.Absolute(n)      => n
+      case OffsetSpec.FromEnd(n)       => math.max(0L, leo - n)
+      case OffsetSpec.End              => leo
+    }
+    val endExclusive = end.fold(Long.MaxValue)(e => if (e == Long.MaxValue) e else e + 1)
+    val capped = if (from > Long.MaxValue - rows) Long.MaxValue else from + rows
+    (from, math.min(leo, math.min(endExclusive, capped)))
+  }
+
   /** `end >= start` validation (`/root/reference/src/consume.rs:581-589`). */
   def validate(): Either[String, ConsumeOpt] = (start, end) match {
     case (Some(s), Some(e)) if e < s =>
@@ -142,9 +163,15 @@ object ConsumeOpt {
     var opt = ConsumeOpt(topic = "")
     val seen = scala.collection.mutable.LinkedHashSet.empty[String]
 
-    def parseLong(flag: String, v: String): Either[String, Long] =
-      try Right(java.lang.Long.parseLong(v))
-      catch {
+    // every numeric flag is a count, an offset or a partition id: a
+    // negative value, or a partition id past Int.MaxValue, is rejected
+    // here rather than wrapped or saturated downstream
+    def parseLong(flag: String, v: String, max: Long = Long.MaxValue): Either[String, Long] =
+      try {
+        val n = java.lang.Long.parseLong(v)
+        if (n >= 0L && n <= max) Right(n)
+        else Left(s"error: invalid value '$v' for '$flag': must be in 0..=$max")
+      } catch {
         case _: NumberFormatException =>
           Left(s"error: invalid value '$v' for '$flag': not a number")
       }
@@ -186,7 +213,7 @@ object ConsumeOpt {
         }
         name match {
           case "partition" =>
-            parseLong(flagTok, v) match {
+            parseLong(flagTok, v, Int.MaxValue) match {
               case Left(e)  => return Left(e)
               case Right(n) => opt = opt.copy(partition = n.toInt); seen += "partition"
             }

@@ -1,8 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.transforms.{TransformChain, TransformRegistry}
+import graft.sources.v2.FluvioDsv2
+import graft.transforms.TransformChain
 
 /** How a stored table plays the role of a Fluvio topic: which columns carry
   * the record offset / timestamp / JSON value.
@@ -96,15 +97,6 @@ object TopicRegistry {
             s"set ${confKey(topic)}=offsetCol,timestampCol,valueCol)")
       else
         throw new IllegalArgumentException(s"Topic not found: $topic"))
-
-  /** Partition count of a topic, from its hive `partition=N` layout
-    * (directory metadata only); single-partition topics have no subdirs. */
-  def partitionCount(baseDir: String, topic: String): Int = {
-    val subs = Option(new java.io.File(topicPath(baseDir, topic)).listFiles())
-      .getOrElse(Array.empty)
-      .count(f => f.isDirectory && f.getName.startsWith("partition="))
-    math.max(subs, 1)
-  }
 }
 
 /** Builds the 4-partition `events_mp` topic fixture, derived
@@ -155,41 +147,44 @@ object MpFixture {
   *   - [[topics]]    ≙ `fluvio_topics()`
   *   - [[partitions]]≙ `fluvio_partitions()`
   *
-  * Everything is declared through the DataFrame API so Catalyst gets full
-  * pushdown/pruning freedom; no driver-side row loops.
+  * A consume is declared through the DataFrame API so Catalyst gets full
+  * pushdown/pruning freedom; no driver-side row loops. The admin scans
+  * read directory listings and parquet footers only.
   */
 object FluvioDuck {
-
-  /** The one partition-selection contract, shared by the batch and
-    * streaming consume paths. Single-partition topics (no `partition`
-    * layout column): `-p`/`-A` are accepted and ignored, matching the
-    * reference's consumer pinned to partition 0 regardless of flags
-    * (/root/reference/src/consume.rs:179). Multi-partition topics (hive
-    * `partition=N` subdirs) implement the axis Spark actually has:
-    * default reads partition 0 (the reference's pin), `-p N` selects one
-    * partition — a partition-value filter the scan turns into storage
-    * partition pruning (only that subtree is listed/read) — and `-A`
-    * reads all. */
-  def selectPartition(df: DataFrame, opt: ConsumeOpt): DataFrame =
-    if (!df.columns.contains("partition") || opt.allPartitions) df
-    else df.filter(col("partition") === opt.partition)
 
   /** Materialize a bounded window of a topic as a DataFrame.
     *
     * Pipeline (mirrors the reference's semantics, not its execution):
-    * parse options → record view → offset window filter → transform chain →
+    * parse options → DSv2 scan of the offset window → transform chain →
     * column projection (default 3-col record schema or `-c` mappings) →
-    * offset order + `--rows` cap.
+    * offset order within each partition.
     *
     * Reference lifecycle: `/root/reference/src/consume.rs:158-210` (bind),
     * `:72-134` (read loop). The reference pulls record-at-a-time over a
     * blocking stream into 2048-row chunks, single-partition; here the whole
-    * thing is one Catalyst plan over a parquet scan (filter pushdown,
-    * column pruning and whole-stage codegen apply).
+    * thing is one Catalyst plan over the `fluvio` DSv2 source, which serves
+    * batch, streaming and the SQL TVF like Spark's Kafka source. The offset
+    * window (`-B`/`-H`/`--start`/`-T`/`--end`) and the `--rows` cap resolve
+    * inside the source ([[ConsumeOpt.window]] per partition against its
+    * footer-count LEO): a `--rows 500` consume of a deep topic plans ~500
+    * rows. Column projection prunes through SupportsPushDownRequiredColumns
+    * and user predicates push through SupportsPushDownFilters
+    * (DsvPushdownCanarySpec pins both).
+    *
+    * The transform chain (SmartModule analog,
+    * reference `src/consume.rs:650-673`) composes on top of the scan.
+    * A map-only chain commutes with the cap, so it runs over the capped
+    * window. A chain that can drop records runs over the uncapped window
+    * (`rowsCap=false`), and [[graft.plans.OrderedCap.byKey]] then counts
+    * post-transform rows in offset order, like the reference's chunk fill
+    * (`:75-92`).
     *
     * Divergences (documented in SURVEY.md §1.2/§4.2): offset/LEO are Long
-    * (not int32-truncated); `--rows` caps post-transform rows in offset
-    * order, like the reference.
+    * (not int32-truncated); under `-A` offset windows and the `--rows` cap
+    * apply per partition (the reference is single-partition,
+    * consume.rs:179, so the axis has no reference semantics; a total-N
+    * arrival-order cap would serialize the scan).
     */
   def consume(spark: SparkSession, cmd: String, baseDir: String): DataFrame = {
     val opt = ConsumeOpt.parse(cmd) match {
@@ -203,139 +198,24 @@ object FluvioDuck {
     // bounded-batch fallback.
     if (opt.continuous)
       return graft.streaming.ConsumeStream.consume(spark, cmd, baseDir)
-    // r14: the DSv2 batch face is THE bounded consume path — one source
-    // serving batch, streaming and the SQL TVF, like Spark's Kafka
-    // source. Offset algebra and the `--rows` window cap resolve inside
-    // the source (segment-level row-range planning: a `--rows 500`
-    // consume of a deep topic PLANS ~500 rows); `-c` mappings and
-    // transform chains compose on top as plan-level projections. The
-    // original file-source implementation stays as the documented
-    // fallback ([[consumeFileSource]], conf-selectable) — same grammar,
-    // same results (DsvPushdownCanarySpec pins face equality).
-    if (spark.conf.getOption("spark.graft.consume.face").contains("file"))
-      consumeFileSource(spark, cmd, baseDir)
-    else
-      graft.sources.v2.FluvioBatchConsume.consume(spark, cmd, baseDir)
-  }
-
-  /** The file-source consume fallback (`spark.graft.consume.face=file`):
-    * the pre-r14 primary path — a parquet file-source scan with the whole
-    * grammar (offset windows, LEO joins, transforms, `-c`, `--rows`)
-    * expressed in-plan. Kept whole: it is the A/B twin that proves the
-    * DSv2 face's bind-time offset algebra against a pure Catalyst
-    * formulation, and the escape hatch if a deployment's topic layout
-    * defeats the DSv2 planner's footer-count model. */
-  def consumeFileSource(spark: SparkSession, cmd: String, baseDir: String): DataFrame = {
-    val opt = ConsumeOpt.parse(cmd) match {
-      case Left(err) => throw new IllegalArgumentException(err) // scan_error_surface
-      case Right(o)  => o
-    }
-    if (opt.continuous)
-      return graft.streaming.ConsumeStream.consume(spark, cmd, baseDir)
-    val view = TopicRegistry.requireRecordView(spark, baseDir, opt.topic)
-
-    val raw = Tables.load(spark, baseDir, opt.topic)
-
-    // ---- partition selection (shared contract with the streaming path —
-    // see [[selectPartition]]). Offsets are dense PER PARTITION, so all
-    // offset-window logic below stays exact for any single-partition
-    // selection; under `-A`, offset windows/caps apply per partition
-    // (records carry a `__part` key and every end-relative window joins
-    // per-partition LEOs — a fan-in total order would serialize the
-    // scan; documented divergence).
-    val selected = selectPartition(raw, opt)
-    val multiPart = opt.allPartitions && raw.columns.contains("partition")
-
-    // Canonical record shape. Offsets in fixtures are dense from 0 per
-    // partition (LEO = max(offset)+1 = count).
-    val baseCols = Seq(
-      col(view.offsetCol).cast("long").as("offset"),
-      col(view.timestampCol).cast("timestamp").as("timestamp"),
-      col(view.valueCol).cast("string").as("value"))
-    val records =
-      if (multiPart) selected.select(baseCols :+ col("partition").as("__part"): _*)
-      else selected.select(baseCols: _*)
-
-    // Log-end offset join for end-relative windows: PER PARTITION for a
-    // `-A` multi-partition read (grouped agg broadcast-joined on
-    // `__part`), else one global LEO via a broadcast single-row agg —
-    // in-plan either way, no driver collect, any partition count.
-    def leoJoin(target: DataFrame, leoName: String): (DataFrame, Column) =
-      if (multiPart) {
-        val leo = records.groupBy("__part").agg((max(col("offset")) + 1).as(leoName))
-        (target.join(broadcast(leo), "__part"), col(leoName))
-      } else {
-        val leo = records.agg((max(col("offset")) + 1).as(leoName))
-        (target.crossJoin(broadcast(leo)), col(leoName))
-      }
-
-    // ---- offset window (calculate_offset, /root/reference/src/consume.rs:580-605)
-    val windowed: DataFrame = opt.startOffset match {
-      case OffsetSpec.FromBeginning(0) => records
-      case OffsetSpec.FromBeginning(n) => records.filter(col("offset") >= n)
-      case OffsetSpec.Absolute(n)      => records.filter(col("offset") >= n)
-      case OffsetSpec.FromEnd(n) =>
-        val (j, leo) = leoJoin(records, "__leo")
-        j.filter(col("offset") >= leo - n).drop("__leo")
-      case OffsetSpec.End =>
-        val (j, leo) = leoJoin(records, "__leo")
-        j.filter(col("offset") >= leo).drop("__leo")
-    }
-    val ended = opt.end match {
-      case Some(e) => windowed.filter(col("offset") <= e) // inclusive end bound
-      case None    => windowed
-    }
-
-    // ---- transform chain (SmartModule analog), applied to the record view
-    // BEFORE projection, like the server-side WASM chain
-    // (/root/reference/src/consume.rs:650-673). A chain of map-type
-    // (cardinality-preserving) transforms commutes with the row cap, so it
-    // is treated as cap-friendly below and applied to the capped window.
     val chain = TransformChain.fromOpt(opt)
-    val mapOnlyChain = chain.forall(t => TransformRegistry.preservesCardinality(t.uses))
-    def applyChain(df: DataFrame): DataFrame =
-      chain.foldLeft(df) { (d, t) => TransformRegistry(t.uses)(d, t.params) }
-    val transformed = if (mapOnlyChain) ended else applyChain(ended)
-
-    // ---- `--rows` cap in offset order (post-transform, matching the
-    // reference's chunk-fill count at /root/reference/src/consume.rs:75-92).
-    //
-    // Without transforms the cap is a pure OFFSET-RANGE FILTER: fixture
-    // offsets are dense from 0 (like a contiguous log), so "first N rows of
-    // the window" ≡ offset < windowStart + N — fully parallel, pushed to
-    // the scan, and no single-partition GlobalLimit shuffle at any scale.
-    // A transform chain can drop records (rows counts POST-transform), so
-    // that path keeps the exact sort+limit semantics.
-    val capped0: DataFrame =
-      if (mapOnlyChain) {
-        val capN = math.min(opt.rows, Long.MaxValue - 10_000_000L)
-        opt.startOffset match {
-          case OffsetSpec.FromBeginning(n) => transformed.filter(col("offset") < n + capN)
-          case OffsetSpec.Absolute(n)      => transformed.filter(col("offset") < n + capN)
-          case OffsetSpec.FromEnd(n) =>
-            val (j, leo) = leoJoin(transformed, "__leo2")
-            j.filter(col("offset") < leo - n + capN).drop("__leo2")
-          case OffsetSpec.End =>
-            val (j, leo) = leoJoin(transformed, "__leo2")
-            j.filter(col("offset") < leo + capN).drop("__leo2")
-        }
-      } else {
-        // cardinality-changing chain: the cap must count POST-transform
-        // rows in offset order, per partition under `-A`. Block-bucketed
-        // counting cap — no global sort, no single-partition GlobalLimit
-        // funnel (see OrderedCap).
-        graft.plans.OrderedCap.byKey(transformed, "offset", opt.rows,
-          groups = if (multiPart) Seq("__part") else Nil)
-      }
-    // map-type transforms run AFTER the cap (commutes; see above)
-    val capped = if (mapOnlyChain && chain.nonEmpty) applyChain(capped0) else capped0
-
+    val mapOnly = TransformChain.mapOnly(chain)
+    val rel = spark.read.format("fluvio")
+      .option("cmd", cmd).option("baseDir", baseDir)
+      .option("rowsCap", String.valueOf(mapOnly))
+      .load()
+    val transformed = TransformChain.run(chain, rel)
+    // `partition` is the DSv2 extra beside (offset, timestamp, value):
+    // the post-transform cap counts per partition under `-A`, where
+    // offsets repeat across partitions; the projection then drops it
+    val capped =
+      if (mapOnly) transformed
+      else graft.plans.OrderedCap.byKey(transformed, "offset", opt.rows,
+        groups = if (opt.allPartitions) Seq("partition") else Nil)
     projectAndOrder(capped, opt)
   }
 
-  /** The consume grammar's projection + ordering tail, SHARED by the DSv2
-    * face and the file-source fallback (extracted r14 so the faces cannot
-    * drift — identical plan shape over either scan).
+  /** The consume grammar's projection + ordering tail.
     *
     * Projection: default record columns or -c mappings (the reference's
     * columns_mappings, src/consume.rs:607-637). With mappings, one
@@ -353,7 +233,7 @@ object FluvioDuck {
     * rows by offset block (2^20 offsets), so when they span several
     * blocks the partitions here are hash-ordered blocks: each sorted,
     * but the blocks not in offset order, even for a one-split topic. */
-  private[graft] def projectAndOrder(capped: DataFrame, opt: ConsumeOpt): DataFrame = {
+  private def projectAndOrder(capped: DataFrame, opt: ConsumeOpt): DataFrame = {
     val projected =
       if (opt.columns.isEmpty)
         capped.select(col("offset"), col("timestamp"), col("value"))
@@ -367,34 +247,25 @@ object FluvioDuck {
 
   /** `fluvio_topics()` — one row per topic: (name, partitions).
     * Reference: `/root/reference/src/topic.rs:20-28`, schema `:52-53`.
-    * Fixture topics are single-partition parquet tables. */
+    * The partition count is the topic's layout as the DSv2 source reads
+    * it ([[FluvioDsv2.partitionDirs]]): directory metadata only, no job. */
   def topics(spark: SparkSession, baseDir: String): DataFrame = {
     import spark.implicits._
     TopicRegistry.allTopics(baseDir)
-      .map(t => (t, TopicRegistry.partitionCount(baseDir, t)))
+      .map(t => (t, FluvioDsv2.partitionDirs(baseDir, t).size))
       .toDF("name", "partitions")
   }
 
   /** `fluvio_partitions()` — one row per partition: (topic, partition, LEO).
     * Reference: `/root/reference/src/partition.rs:21-29`, replica-key split
-    * `:113-122`, LEO `:131`. LEO = log-end-offset = row count for dense
-    * offsets; computed as a union of per-topic single-row aggregates (one
-    * distributed job, no driver-side counting). Partition id is VARCHAR, as
-    * in the reference's replica-key split. */
+    * `:113-122`, LEO `:131`. LEO = log-end-offset = record count for dense
+    * offsets, read from the same cached parquet footer counts the consume
+    * planners use ([[FluvioDsv2.leo]]) — a local relation, no Spark job.
+    * Partition id is VARCHAR, as in the reference's replica-key split. */
   def partitions(spark: SparkSession, baseDir: String): DataFrame = {
-    val perTopic = TopicRegistry.allTopics(baseDir).map { t =>
-      val df = Tables.load(spark, baseDir, t)
-      if (df.columns.contains("partition"))
-        // multi-partition topic: per-partition LEO via one grouped agg
-        // (map-side partials; the partition column comes free from the
-        // hive layout, no data read beyond row counts)
-        df.groupBy(col("partition").cast("string").as("partition"))
-          .agg(count(lit(1)).as("LEO"))
-          .select(lit(t).as("topic"), col("partition"), col("LEO"))
-      else
-        df.agg(count(lit(1)).as("LEO"))
-          .select(lit(t).as("topic"), lit("0").as("partition"), col("LEO"))
-    }
-    perTopic.reduce(_.unionAll(_))
+    import spark.implicits._
+    TopicRegistry.allTopics(baseDir).flatMap { t =>
+      FluvioDsv2.leo(baseDir, t).toSeq.sortBy(_._1).map { case (p, leo) => (t, p.toString, leo) }
+    }.toDF("topic", "partition", "LEO")
   }
 }

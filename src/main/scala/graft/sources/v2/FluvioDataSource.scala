@@ -22,7 +22,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.{ConsumeOpt, OffsetSpec, RecordView, TopicRegistry}
+import graft.sources.{ConsumeOpt, RecordView, TopicRegistry}
 
 /** DataSource-v2 streaming source for topic directories — the Spark-native
   * analog of the reference's LIVE consumer loop
@@ -153,10 +153,15 @@ object FluvioDsv2 {
       p -> segmentFiles(d).map(rowCount).sum
     }
 
-  /** The shared partition-selection contract (FluvioDuck.selectPartition),
-    * used by BOTH faces of the source: single-partition topics ignore
-    * `-p`/`-A`; multi-partition topics pin partition 0 by default, `-p N`
-    * selects one, `-A` fans over all. */
+  /** The one partition-selection contract, used by the batch and
+    * micro-batch faces of the source and, as a filter on the hive
+    * `partition` column, by the `-d` file stream. Single-partition topics
+    * (no `partition=N` subdirs): `-p`/`-A` are accepted and ignored,
+    * matching the reference's consumer pinned to partition 0 regardless
+    * of flags (reference `src/consume.rs:179`). Multi-partition
+    * topics: default reads partition 0 (the reference's pin), `-p N`
+    * selects one — only that subtree is listed and read — and `-A` reads
+    * all. */
   def selectedDirs(baseDir: String, opt: ConsumeOpt): Map[Int, File] = {
     val dirs = partitionDirs(baseDir, opt.topic)
     if (dirs.size <= 1 || opt.allPartitions) dirs
@@ -252,18 +257,18 @@ class FluvioTable(cmd: String, baseDir: String,
     // table properties.
     val maxPerTrigger = options.getLong("maxRecordsPerTrigger", 0L)
     val maxBytesPerTrigger = options.getLong("maxBytesPerTrigger", 0L)
-    // `--rows` on the BATCH face (r14): honored in segment planning by
-    // default — the raw relation delivers the first `rows` records of
-    // the window PER PARTITION (dense offsets make the cap a row-range,
-    // so a `--rows 500` consume of a deep topic PLANS ~500 rows; under
-    // `-A` the cap is per partition, the same documented divergence as
-    // the file path's per-partition FromEnd windows — the reference is
-    // single-partition, consume.rs:179, so the axis has no reference
-    // semantics to diverge from). `rowsCap=false` opts out: the consume
-    // wrapper sets it when a cardinality-CHANGING transform chain must
-    // count post-transform rows (the cap then applies after the chain,
-    // outside the scan). Streaming admission is a different axis
-    // (maxRecordsPerTrigger above); the micro-batch face never row-caps.
+    // `--rows` on the BATCH face: honored in segment planning by default
+    // — the raw relation delivers the first `rows` records of the window
+    // PER PARTITION (dense offsets make the cap a row-range, so a
+    // `--rows 500` consume of a deep topic PLANS ~500 rows; under `-A`
+    // the cap is per partition, like the end-relative windows — the
+    // reference is single-partition, consume.rs:179, so the axis has no
+    // reference semantics to diverge from). `rowsCap=false` opts out:
+    // the consume wrapper sets it when a cardinality-CHANGING transform
+    // chain must count post-transform rows (the cap then applies after
+    // the chain, outside the scan). Streaming admission is a different
+    // axis (maxRecordsPerTrigger above); the micro-batch face never
+    // row-caps.
     val rowsCap = options.getBoolean("rowsCap", true)
     // COLUMN PRUNING, two routes to the same reader projection: the
     // explicit `columns` option (a stream that needs only `offset` must
@@ -349,26 +354,24 @@ class FluvioTable(cmd: String, baseDir: String,
           new FluvioMicroBatchStream(opt, view, baseDir, maxPerTrigger,
             maxBytesPerTrigger, pruned.fieldNames.toSeq)
         override def toBatch: Batch =
-          new FluvioBatch(opt, view, baseDir, pruned.fieldNames.toSeq,
-            offLo, offHi, partEq, rowsCap)
+          new FluvioBatch(if (rowsCap) opt else opt.copy(rows = Long.MaxValue),
+            view, baseDir, pruned.fieldNames.toSeq, offLo, offHi, partEq)
       }
     }
   }
 }
 
 /** Batch face of the DSv2 source — the SAME provider, offset algebra,
-  * range→file mapping and reader as the streaming face (VERDICT r12
-  * task 7; the Kafka source's one-source-two-faces shape). Bind-time
-  * offset flags resolve against the CURRENT log (`-B`/`--start`/`-H`
-  * absolute, `-T`/default-end relative to LEO, `--end` inclusive cap),
-  * then pushed offset/partition filters tighten each partition's
-  * [start, end) record range before it maps onto segment files — a
-  * `--rows`-capped or offset-filtered batch consume reads only the
-  * overlapping segments, and inside them skips straight to the range. */
+  * range→file mapping and reader as the streaming face (the Kafka
+  * source's one-source-two-faces shape). Each partition's window is
+  * [[ConsumeOpt.window]] against its CURRENT log end, then pushed
+  * offset/partition filters tighten that [from, until) record range
+  * before it maps onto segment files — a `--rows`-capped or
+  * offset-filtered batch consume reads only the overlapping segments,
+  * and inside them skips straight to the range. */
 class FluvioBatch(opt: ConsumeOpt, view: RecordView, baseDir: String,
                   fields: Seq[String],
-                  offLo: Long, offHi: Long, partEq: Option[Int],
-                  capRows: Boolean = true)
+                  offLo: Long, offHi: Long, partEq: Option[Int])
     extends Batch {
 
   override def planInputPartitions(): Array[InputPartition] = {
@@ -379,27 +382,12 @@ class FluvioBatch(opt: ConsumeOpt, view: RecordView, baseDir: String,
     }
     dirs.toSeq.sortBy(_._1).flatMap { case (p, d) =>
       val files = FluvioDsv2.segmentFiles(d)
-      val leoP = files.map(FluvioDsv2.rowCount).sum
-      // the reference's calculate_offset (consume.rs:580-605), same
-      // algebra as the stream's initialOffset — resolved per partition
-      val start0 = opt.startOffset match {
-        case OffsetSpec.FromBeginning(n) => n
-        case OffsetSpec.Absolute(n)      => n
-        case OffsetSpec.FromEnd(n)       => math.max(0L, leoP - n)
-        case OffsetSpec.End              => leoP
-      }
-      val end0 = math.min(leoP, opt.end.map(_ + 1).getOrElse(Long.MaxValue))
-      // `--rows` = first N records of the window, per partition (dense
-      // offsets: ≡ offset < start0 + N) — applied to the WINDOW before
-      // intersecting with pushed filters, so a user predicate on top of
-      // the capped consume filters the capped rows, never widens them.
-      // Saturating add: `--rows` near Long.MaxValue must mean "uncapped".
-      val endCap =
-        if (!capRows) end0
-        else if (start0 > Long.MaxValue - opt.rows) end0
-        else math.min(end0, start0 + opt.rows)
-      val from = math.max(start0, offLo)
-      val to = math.min(endCap, offHi)
+      // the `--rows` cap is part of the window, applied BEFORE the pushed
+      // filters, so a user predicate on top of the capped consume filters
+      // the capped rows, never widens them
+      val (start, until) = opt.window(files.map(FluvioDsv2.rowCount).sum)
+      val from = math.max(start, offLo)
+      val to = math.min(until, offHi)
       if (to > from) FluvioDsv2.sliceSegments(files, p, from, to, view, fields)
       else Seq.empty
     }.toArray
@@ -424,24 +412,14 @@ class FluvioMicroBatchStream(opt: ConsumeOpt, view: RecordView, baseDir: String,
   private def selectedDirs(): Map[Int, File] =
     FluvioDsv2.selectedDirs(baseDir, opt)
 
-  override def initialOffset(): Offset = {
+  // admission control, not `--rows`, bounds a micro-batch: the stream's
+  // windows are the uncapped ones
+  private val uncapped = opt.copy(rows = Long.MaxValue)
+
+  override def initialOffset(): Offset =
     // bind-time start offsets, like the reference's calculate_offset
     // (consume.rs:580-605): end-relative flags read the log end ONCE here
-    val dirs = selectedDirs()
-    val starts = opt.startOffset match {
-      case OffsetSpec.FromBeginning(n) => dirs.map { case (p, _) => p -> n }
-      case OffsetSpec.Absolute(n)      => dirs.map { case (p, _) => p -> n }
-      case OffsetSpec.FromEnd(n) =>
-        dirs.map { case (p, d) =>
-          p -> math.max(0L, FluvioDsv2.segmentFiles(d).map(FluvioDsv2.rowCount).sum - n)
-        }
-      case OffsetSpec.End =>
-        dirs.map { case (p, d) =>
-          p -> FluvioDsv2.segmentFiles(d).map(FluvioDsv2.rowCount).sum
-        }
-    }
-    FluvioOffset(starts)
-  }
+    FluvioOffset(partitionMeta().map { case (p, (rows, _)) => p -> uncapped.window(rows)._1 })
 
   /** ONE directory listing + stat pass over the selected partitions:
     * per partition, (row count, on-disk bytes) across its segments. Row
@@ -455,12 +433,11 @@ class FluvioMicroBatchStream(opt: ConsumeOpt, view: RecordView, baseDir: String,
       p -> ((fs.map(FluvioDsv2.rowCount).sum, fs.map(_.length()).sum))
     }
 
-  /** Current deliverable end per partition: LEO capped by `--end N`
-    * (inclusive ⇒ cap at N+1). Footer-metadata only — no data read. */
-  private def currentEnds(meta: Map[Int, (Long, Long)]): Map[Int, Long] = {
-    val cap = opt.end.map(_ + 1).getOrElse(Long.MaxValue)
-    meta.map { case (p, (rows, _)) => p -> math.min(rows, cap) }
-  }
+  /** Current deliverable end per partition: the window's end against
+    * the current LEO (`--end N` inclusive). Footer-metadata only — no
+    * data read. */
+  private def currentEnds(meta: Map[Int, (Long, Long)]): Map[Int, Long] =
+    meta.map { case (p, (rows, _)) => p -> uncapped.window(rows)._2 }
 
   private def currentEnds(): Map[Int, Long] = currentEnds(partitionMeta())
 

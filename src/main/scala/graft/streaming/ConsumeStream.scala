@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.{ColumnMapping, ConsumeOpt, TopicRegistry, Tables}
-import graft.transforms.{TransformChain, TransformRegistry}
+import graft.sources.{ColumnMapping, ConsumeOpt, OffsetSpec, TopicRegistry, Tables}
+import graft.transforms.TransformChain
 
 /** The `-d` (continuous) flavor of consume: the same option grammar,
   * projection compiler and transform chain as the batch path, but planned
@@ -36,8 +36,10 @@ object ConsumeStream {
       .parquet(TopicRegistry.topicPath(baseDir, opt.topic))
     // partition selection: the one shared contract (default pins 0,
     // -p prunes at file listing, -A streams all; single-partition topics
-    // ignore the flags) — see FluvioDuck.selectPartition.
-    val selected = graft.sources.FluvioDuck.selectPartition(raw, opt)
+    // ignore the flags) — see FluvioDsv2.selectedDirs.
+    val selected =
+      if (!raw.columns.contains("partition") || opt.allPartitions) raw
+      else raw.filter(col("partition") === opt.partition)
     fromRecords(selected, opt, view.offsetCol, view.timestampCol, view.valueCol)
   }
 
@@ -50,44 +52,38 @@ object ConsumeStream {
       col(timestampCol).cast("timestamp").as("timestamp"),
       col(valueCol).cast("string").as("value"))
 
-    import graft.sources.OffsetSpec._
-    val windowed = opt.startOffset match {
-      case FromBeginning(0) => records
-      case FromBeginning(n) => records.filter(col("offset") >= n)
-      case Absolute(n)      => records.filter(col("offset") >= n)
-      case FromEnd(_) | End =>
+    opt.startOffset match {
+      case OffsetSpec.FromEnd(_) | OffsetSpec.End =>
         throw new IllegalArgumentException(
           "tail/end-relative offsets are not defined on a continuous stream; use -B/-H/--start")
+      case _ => ()
     }
-    val ended = opt.end.fold(windowed)(e => windowed.filter(col("offset") <= e))
 
     // ---- `--rows` cap. The reference's cap applies in continuous mode
     // too: `-d --rows N` blocks awaiting new records until N are filled
     // (/root/reference/src/consume.rs:75-92,675). Two plan shapes:
     //   * map-only chain (incl. no transforms): offsets are dense, so
-    //     "first N window rows" ≡ `offset < start + N` — a pure stateless
-    //     filter, applied ALWAYS (default included), free at any scale.
+    //     "first N window rows" is part of the window's offset range — a
+    //     pure stateless filter, applied ALWAYS (default included), free
+    //     at any scale.
     //   * cardinality-changing chain: rows count POST-transform, so the
-    //     cap needs a running count — a single-key stateful cap
-    //     ([[boundedCap]]). Planted only for an EXPLICIT --rows (a user
-    //     asking for a bounded pull); the implicit default must not put a
-    //     single-task funnel into every filtered 100 TB stream.
+    //     window is uncapped and the cap needs a running count — a
+    //     single-key stateful cap ([[boundedCap]]). Planted only for an
+    //     EXPLICIT --rows (a user asking for a bounded pull); the implicit
+    //     default must not put a single-task funnel into every filtered
+    //     100 TB stream.
     val chain = TransformChain.fromOpt(opt)
-    val mapOnlyChain = chain.forall(t => TransformRegistry.preservesCardinality(t.uses))
-    def applyChain(df: DataFrame): DataFrame =
-      chain.foldLeft(df) { (d, t) => TransformRegistry(t.uses)(d, t.params) }
+    val mapOnly = TransformChain.mapOnly(chain)
+    // the bounded-consume window with an unbounded log end; only a bound
+    // that restricts becomes a predicate (`-B` without `--end`/`--rows`
+    // under a filtering chain plans no window filter at all)
+    val (from, until) =
+      (if (mapOnly) opt else opt.copy(rows = Long.MaxValue)).window(Long.MaxValue)
+    val fromOn = if (from > 0) records.filter(col("offset") >= from) else records
+    val windowed = if (until < Long.MaxValue) fromOn.filter(col("offset") < until) else fromOn
+    val transformed = TransformChain.run(chain, windowed)
     val capped =
-      if (mapOnlyChain) {
-        val start = opt.startOffset match {
-          case FromBeginning(n) => n
-          case Absolute(n)      => n
-          case _                => 0L // unreachable: FromEnd/End raised above
-        }
-        val capN = math.min(opt.rows, Long.MaxValue - start - 1)
-        applyChain(ended.filter(col("offset") < start + capN))
-      } else if (opt.rowsExplicit) {
-        boundedCap(applyChain(ended), opt.rows)
-      } else applyChain(ended)
+      if (!mapOnly && opt.rowsExplicit) boundedCap(transformed, opt.rows) else transformed
 
     if (opt.columns.isEmpty) capped
     else ColumnMapping.project(capped, opt.columns)

@@ -3,6 +3,7 @@ package graft.transforms
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
 import graft.sources.ConsumeOpt
+import org.apache.spark.sql.DataFrame
 import scala.jdk.CollectionConverters._
 
 /** One step of a transform chain: `{uses: <name>, with: {param: value}}`.
@@ -37,6 +38,16 @@ object TransformChain {
             case None       => Nil
           }
     }
+
+  /** True when no step of `chain` can drop or add records, so the chain
+    * commutes with the `--rows` cap: the cap can run first, as an offset
+    * range. An empty chain is map-only. */
+  def mapOnly(chain: Seq[TransformSpec]): Boolean =
+    chain.forall(t => TransformRegistry.preservesCardinality(t.uses))
+
+  /** `chain` applied to `df`, step by step. */
+  def run(chain: Seq[TransformSpec], df: DataFrame): DataFrame =
+    chain.foldLeft(df) { (d, t) => TransformRegistry(t.uses)(d, t.params) }
 
   /** `--smartmodule-path /modules/graft/map-uppercase.wasm` →
     * `graft/map-uppercase`: strip any extension, then try the last one or

@@ -587,6 +587,20 @@ class PlanAuditSpec extends SparkSpec {
     assert(!plan.contains("GlobalLimit"), plan)
   }
 
+  test("fluvio_partitions() and fluvio_topics() run zero Spark jobs: LEOs come from footer counts") {
+    val mp = graft.sources.MpFixture.baseDir(spark, sf) // written before the count
+    val group = s"admin_${System.nanoTime()}"
+    spark.sparkContext.setJobGroup(group, "admin scans")
+    try {
+      for (dir <- Seq(sf, mp)) {
+        assert(graft.sources.FluvioDuck.partitions(spark, dir).collect().nonEmpty)
+        assert(graft.sources.FluvioDuck.topics(spark, dir).collect().nonEmpty)
+      }
+    } finally spark.sparkContext.clearJobGroup()
+    val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group)
+    assert(jobs.isEmpty, s"admin scans ran ${jobs.length} Spark jobs")
+  }
+
   test("sample_token_budget: the WeightedCap fill reads documents at most twice") {
     val df = q("sample_token_budget")
     val plan = finalPlan(df)

@@ -118,6 +118,22 @@ class ConsumeOptSpec extends AnyFunSuite {
     assert(err("t -H abc").contains("not a number"))
   }
 
+  test("negative numeric flags and out-of-range -p are invalid values") {
+    // each would otherwise wrap or saturate downstream: --rows -1 read the
+    // whole window, -H -3 planned past the cap, -p 4294967297 read
+    // partition 1 through Int truncation
+    for ((flag, v) <- Seq("--rows" -> "-1", "-H" -> "-3", "-T" -> "-1",
+        "--start" -> "-5", "--end" -> "-1", "-b" -> "-10"))
+      assert(err(s"t $flag $v") ==
+        s"error: invalid value '$v' for '$flag': must be in 0..=${Long.MaxValue}")
+    assert(err("t --rows=-1") ==
+      s"error: invalid value '-1' for '--rows': must be in 0..=${Long.MaxValue}")
+    for (v <- Seq("-1", "4294967297", (Int.MaxValue + 1L).toString))
+      assert(err(s"t -p $v") == s"error: invalid value '$v' for '-p': must be in 0..=${Int.MaxValue}")
+    assert(ok(s"t -p ${Int.MaxValue}").partition == Int.MaxValue)
+    assert(ok(s"t -B --rows 0 --end ${Long.MaxValue}").rows == 0L)
+  }
+
   test("--flag=value form") {
     val o = ok("t --rows=5 --start=2 --end=9")
     assert(o.rows == 5L && o.start.contains(2L) && o.end.contains(9L))

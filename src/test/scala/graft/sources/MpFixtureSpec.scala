@@ -108,27 +108,6 @@ class MpFixtureSpec extends SparkSpec {
       s"DSv2 -p pruning planned partitions ${planned.map(_.partitionId).toSeq}")
   }
 
-  test("-p N prunes the other partition subtrees at the scan (numFiles, file fallback)") {
-    val p1 = FluvioDuck.consumeFileSource(spark, "events_mp -p 1 -B --rows 1000000", base)
-    p1.collect() // execute THIS QueryExecution so its scan metrics populate
-    def scanOf(plan: org.apache.spark.sql.execution.SparkPlan)
-        : org.apache.spark.sql.execution.FileSourceScanExec = plan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        scanOf(a.executedPlan)
-      case p => p.collectLeaves().collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-        case q: org.apache.spark.sql.execution.adaptive.ShuffleQueryStageExec =>
-          scanOf(q.plan)
-      }.get
-    }
-    val scan = scanOf(p1.queryExecution.executedPlan)
-    val readFiles = scan.metrics("numFiles").value
-    val allFiles = spark.read
-      .parquet(TopicRegistry.topicPath(base, "events_mp")).inputFiles.length
-    assert(readFiles > 0 && readFiles < allFiles,
-      s"expected partition pruning: read $readFiles of $allFiles files")
-  }
-
   test("-A with a filter chain caps --rows per partition, on both faces") {
     // offsets repeat across partitions: a global offset-ordered cap would
     // keep 2 rows in total, split by arbitrary tie-breaks
@@ -143,7 +122,7 @@ class MpFixtureSpec extends SparkSpec {
       .filter(col("rn") <= 2).select("offset", "value")
       .collect().map(_.toString).sorted.toSeq
     assert(want.size > 2, want)
-    for (df <- Seq(FluvioDuck.consume(spark, cmd, base), FluvioDuck.consumeFileSource(spark, cmd, base)))
-      assert(df.select("offset", "value").collect().map(_.toString).sorted.toSeq == want)
+    assert(FluvioDuck.consume(spark, cmd, base).select("offset", "value")
+      .collect().map(_.toString).sorted.toSeq == want)
   }
 }

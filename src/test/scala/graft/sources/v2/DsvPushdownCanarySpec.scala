@@ -144,18 +144,22 @@ class DsvPushdownCanarySpec extends SparkSpec {
     assert(offsets("events -B --end 5") == (0L to 5L).toSeq)      // inclusive end
     assert(offsets("events --start 17") == (17L until 20L).toSeq) // absolute
     assert(offsets("events") == Seq.empty)                        // default: log end
-    // and the wrapper's full consume equals the file-source path
-    val viaDsv2 = graft.sources.v2.FluvioBatchConsume
+    // the largest --end saturates to "no end" instead of overflowing
+    assert(offsets(s"events -B --end ${Long.MaxValue}") == (0L until 20L).toSeq)
+    assert(offsets(s"events -T 3 --end ${Long.MaxValue} --rows ${Long.MaxValue}") ==
+      (17L until 20L).toSeq)
+    // and the wrapper's full consume delivers the source's first 7 records
+    val got = graft.sources.FluvioDuck
       .consume(spark, "events -B --rows 7", dir.getAbsolutePath)
-      .collect().map(r => (r.getLong(0), r.getString(2))).sortBy(_._1).toSeq
-    val viaFile = graft.sources.FluvioDuck
-      .consumeFileSource(spark, "events -B --rows 7", dir.getAbsolutePath)
-      .collect().map(r => (r.getLong(0), r.getString(2))).sortBy(_._1).toSeq
-    assert(viaDsv2 == viaFile, "batch faces diverged")
+      .collect().map(r => (r.getLong(0), r.getString(2))).toSeq
+    val want = Tables.load(spark, sf, "events").filter(col("event_id") < 7)
+      .orderBy("event_id").select(col("event_id").cast("long"), col("props"))
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(got == want)
   }
 
-  // ---- r14: the DSv2 face is THE consume path; the full grammar composes
-  // over the scan and the faces must agree on every grammar axis.
+  // ---- the DSv2 face is THE consume path; the full grammar composes over
+  // the scan, checked against expectations derived from the source rows.
 
   private def mkTopic(prefix: String): java.io.File = {
     val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
@@ -177,7 +181,7 @@ class DsvPushdownCanarySpec extends SparkSpec {
 
   test("r14 composed plan: --rows is PLANNED as a row range and -c prunes the reader to (offset, value)") {
     val dir = mkTopic("dsv2_composed_")
-    val df = FluvioBatchConsume.consume(
+    val df = graft.sources.FluvioDuck.consume(
       spark, "events -B --rows 7 -c k:i=k", dir.getAbsolutePath)
     val planned = plannedRecords(df)
     // the cap reached segment planning: exactly 7 records planned, not
@@ -193,27 +197,31 @@ class DsvPushdownCanarySpec extends SparkSpec {
 
   test("r14 face equality: -c mappings and jolt transform chains agree across faces") {
     val dir = mkTopic("dsv2_faces_")
-    def both(cmd: String): (Seq[String], Seq[String]) = {
-      def dump(df: org.apache.spark.sql.DataFrame): Seq[String] =
-        df.collect().map(_.toString).sorted.toSeq
-      (dump(FluvioBatchConsume.consume(spark, cmd, dir.getAbsolutePath)),
-        dump(graft.sources.FluvioDuck.consumeFileSource(spark, cmd, dir.getAbsolutePath)))
-    }
+    def dump(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    def consume(cmd: String): Seq[String] =
+      dump(graft.sources.FluvioDuck.consume(spark, cmd, dir.getAbsolutePath))
+    val src = Tables.load(spark, sf, "events").filter(col("event_id") < 40)
+    val k = get_json_object(col("props"), "$.k").cast("int")
+    val records = src.select(col("event_id").cast("long").as("offset"),
+      col("ts").cast("timestamp").as("timestamp"), col("props").as("value"))
     // -c typed mappings incl. the error-as-value miss contract
-    val (c1, f1) = both("events -B --rows 25 -c k:i=k -c miss=nope")
-    assert(c1 == f1, "faces diverged on -c mappings")
+    assert(consume("events -B --rows 25 -c k:i=k -c miss=nope") ==
+      dump(src.filter(col("event_id") < 25).select(k, lit("Node \"nope\" not found"))),
+      "-c mappings")
     // map-type jolt chain (cap commutes, stays in-scan) + -c on the shifted key
-    val (c2, f2) = both("events -B --rows 25 " +
+    assert(consume("events -B --rows 25 " +
       """--transform {"uses":"infinyon/jolt@0.1.0","with":{"spec":"[{\"operation\":\"shift\",\"spec\":{\"k\":\"kk\"}}]"}} """ +
-      "-c kk:i=kk")
-    assert(c2 == f2, "faces diverged on a jolt chain")
-    // cardinality-CHANGING chain (smartmodule filter): cap counts
-    // post-transform rows on both faces
-    val (c3, f3) = both(
-      "events -B --rows 5 --smartmodule graft/filter-json-eq -e key=k -e value=7")
-    assert(c3 == f3, "faces diverged on a filtering chain with a binding cap")
-    // end-relative window + explicit --rows through the grammar
-    val (c4, f4) = both("events -T 9 --rows 4")
-    assert(c4 == f4, "faces diverged on an end-relative capped window")
+      "-c kk:i=kk") == dump(src.filter(col("event_id") < 25).select(k)), "jolt chain")
+    // cardinality-CHANGING chain (smartmodule filter): the cap counts
+    // post-transform rows
+    assert(consume(
+      "events -B --rows 5 --smartmodule graft/filter-json-eq -e key=k -e value=7") ==
+      dump(records.filter(get_json_object(col("value"), "$.k") === "7")
+        .orderBy("offset").limit(5)), "filtering chain")
+    // end-relative window + explicit --rows through the grammar: LEO 40,
+    // start 31, first 4 records
+    assert(consume("events -T 9 --rows 4") ==
+      dump(records.filter(col("offset").between(31, 34))), "end-relative capped window")
   }
 }

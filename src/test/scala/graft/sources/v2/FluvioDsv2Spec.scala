@@ -105,6 +105,13 @@ class FluvioDsv2Spec extends SparkSpec {
       assert(spark.table(name).select("offset").collect()
         .map(_.getLong(0)).sorted.toSeq == (0L to 49L))
     } finally q.stop()
+    // the largest --end means "no end": it saturates instead of wrapping
+    // to a negative cap that would never deliver
+    val (all, q2) = startQuery(s"events -B --end ${Long.MaxValue}", dir.getAbsolutePath)
+    try {
+      q2.processAllAvailable()
+      assert(spark.table(all).count() == 100L)
+    } finally q2.stop()
   }
 
   test("multi-partition topic: -p prunes to one partition, -A streams all") {
