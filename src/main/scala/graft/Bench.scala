@@ -63,37 +63,15 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** The bench session config, shared with tools.ScaleAudit so scale
-    * slopes are measured under exactly the conditions the bench grades. */
-  private[graft] def session(cpus: String): SparkSession = {
-    val spark = sessionBuilder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
-
-  /** Bench session + extra confs — for measurement harnesses (the
-    * perfbench JVM) that run on the exact bench baseline plus their own
-    * settings. */
+  /** The one session config. Bench, Verify, every tool, the perfbench
+    * JVM and the test `SparkSpec` build their session here, so a number
+    * measured anywhere in the repo is measured under the config the bench
+    * grades. `extra` holds only the keys a caller must set differently
+    * (Verify's ANSI leg, the streaming tools' progress retention and state
+    * partition count, the tests' app name); it is applied last. */
   private[graft] def sessionWith(cpus: String,
                                  extra: Map[String, String]): SparkSession = {
-    val b = sessionBuilder(cpus)
-    extra.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = sessionBuilder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    runSuite(spark, sfDir)
-  }
-
-  private def sessionBuilder(cpus: String): SparkSession.Builder =
-    SparkSession.builder()
+    val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -126,6 +104,21 @@ object Bench {
       .config("spark.sql.files.openCostInBytes", "1m")
       .config("spark.cleaner.periodicGC.interval", "2min")
       .config("spark.ui.enabled", "false")
+    extra.foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
+  /** The session config with nothing changed: the bench itself, ScaleAudit,
+    * MoversCheck, Profile and the tuning tools. */
+  private[graft] def session(cpus: String): SparkSession =
+    sessionWith(cpus, Map.empty)
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    runSuite(session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")), sfDir)
+  }
 
   private def runSuite(spark: SparkSession, sfDir: String): Unit = {
     // JVM/codegen warm-up outside the timed region — including the

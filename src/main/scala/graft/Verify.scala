@@ -4,6 +4,23 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The bench session config on SPARK_GRAFT_CPUS cores (default 4), with
+    * one leg of its own: ANSI on is the stock Spark 4 default and, since
+    * round 11, the engine's pinned default too — every entry is ANSI-CLEAN
+    * by construction (guarded divisions, no overflow-prone casts;
+    * malformed-input coercions ride try_cast-style kernels), and the
+    * full-suite SPARK_GRAFT_ANSI experiment recorded in PERF.md proved
+    * both legs return identical rows for all entries.
+    * SPARK_GRAFT_ANSI=false re-runs the permissive compatibility leg (the
+    * reference's coercion semantics); AnsiParitySpec is the per-build
+    * tripwire that the legs stay identical. Shared with tools.VerifyOne. */
+  private[graft] def session(): SparkSession = {
+    val spark = Bench.sessionWith(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
+      sys.env.get("SPARK_GRAFT_ANSI").map("spark.sql.ansi.enabled" -> _).toMap)
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def main(args: Array[String]): Unit = {
     // args: sfDir outDir [name,name,...] — the optional third arg
     // restricts the dump to a comma-separated entry subset (focused
@@ -12,43 +29,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // ANSI on is the stock Spark 4 default and, since round 11, the
-      // engine's pinned default too: every entry is ANSI-CLEAN by
-      // construction (guarded divisions, no overflow-prone casts;
-      // malformed-input coercions ride try_cast-style kernels), and the
-      // full-suite SPARK_GRAFT_ANSI experiment recorded in PERF.md
-      // proved both legs return identical rows for all entries.
-      // SPARK_GRAFT_ANSI=false re-runs the permissive compatibility leg
-      // (the reference's coercion semantics); AnsiParitySpec is the
-      // per-build tripwire that the legs stay identical.
-      .config("spark.sql.ansi.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ANSI", "true"))
-      // default threshold is Int.MaxValue: a huge .limit(n) then allocates
-      // an n-entry top-k buffer per partition (TakeOrderedAndProject);
-      // above this, plans fall back to distributed Sort + GlobalLimit
-      .config("spark.sql.execution.topKSortFallbackThreshold", "100000")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // TypedImperativeAggregates (MinHashAgg/SimHashAgg) plan as
-      // ObjectHashAggregate; the default 128-group threshold degrades any
-      // real corpus to per-partition sort-based aggregation
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
-      // see Bench: the 100-entry generated-class cache thrashes on a
-      // 114-query suite; size it to the suite
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // fixture tables are single small parquet files; without a lower
-      // split size every scan is one input partition and per-row-expensive
-      // operators (JSON transforms) run on one core
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

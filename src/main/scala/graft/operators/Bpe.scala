@@ -165,8 +165,8 @@ object Bpe {
     *      (cnt DESC, l, r) tie-break is replayed verbatim).
     *
     * Worst case (all top pairs chained, or boundary ties) a round
-    * accepts one pair — exactly the serial algorithm. tools/BpeTune
-    * measures the realized batch factor; PERF.md records it. */
+    * accepts one pair — exactly the serial algorithm. The realized
+    * batch factor (sf0.01, batched vs serial) is recorded in PERF.md. */
   def learnMerges(words: DataFrame, numMerges: Int,
                   batch: Int = 64): (Seq[Merge], DataFrame) = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")

@@ -331,9 +331,10 @@ object Dedup {
     * maxDist < segments). Blocks on 16-bit signature segments so only
     * same-segment pairs are compared.
     *
-    * Operating-point note (measured, PairsTune): on the fixture corpus the
-    * word-3-gram jaccard≥0.5 truth pairs span hamming 0-12 — the docs are
-    * short, so one differing token moves many bit-sums across zero. Full
+    * Operating-point note (measured at sf0.01 and sf0.1): on the fixture
+    * corpus the word-3-gram jaccard≥0.5 truth pairs span hamming 0-12 —
+    * the docs are short, so one differing token moves many bit-sums
+    * across zero. Full
     * recall of that truth set therefore needs maxDist=12/segments=16,
     * which also admits ~640k low-signal pairs at sf0.1 (precision-free).
     * The default (3, 4) is the useful dedup point; its exact-duplicate

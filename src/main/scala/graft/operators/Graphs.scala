@@ -74,11 +74,10 @@ object Graphs {
     // anti-join for the dangling sum, and a node-set + seed-mark join in
     // the assembly — each a re-derivation (or re-shuffle) of edge-table
     // aggregates the loop never changes (measured at sf0.1, iters=2,
-    // graft.tools.JobCount: 37 jobs / 109 tasks / 16.4 MB shuffle
-    // before; 33 / 84 / 14.6 MB after). At corpus scale each round now
-    // shuffles exactly the edge join + inflow aggregation + one
-    // node-sized assembly join; the
-    // dangling sum is a joinless filter-aggregate over the checkpointed
+    // counting every job the entry schedules: 37 jobs / 109 tasks /
+    // 16.4 MB shuffle before; 33 / 84 / 14.6 MB after; OPTIMIZATION_r14.md).
+    // At corpus scale each round now shuffles exactly the edge join +
+    // inflow aggregation + one node-sized assembly join; the dangling sum is a joinless filter-aggregate over the checkpointed
     // iterate. The rank algebra and the outputs are bit-identical.
     val nn = nodes.agg(count(lit(1)).as("n_nodes"))
     val ns = seedSet.agg(count(lit(1)).as("n_seeds"))

@@ -366,8 +366,8 @@ object Ivf {
     * (depth=1, nProbe=nCells) — candidate volume exactly 1.0: the audit
     * honestly degenerates to a corpus scan through the same equi-join
     * plan, which is CHEAPER than the hand-pinned point it replaces
-    * (depth-2/nProbe-7 read 1.75 corpus-equivalents; the grid sweep in
-    * tools/LabelNoiseTune confirms 1.0 is the fixture's min-volume
+    * (depth-2/nProbe-7 read 1.75 corpus-equivalents; a grid sweep over
+    * (nCells, nProbe, assign-depth) found 1.0 the fixture's min-volume
     * full-coverage config at every swept nCells).
     *
     * The derived point guarantees full recall only for sampled queries;

@@ -105,7 +105,7 @@ object Pq {
     * NearestCell-over-slice form carried m big case-class expressions
     * whose deep structural equality Catalyst re-walks all through
     * optimization — ~2 s of driver-side plan work per query at m=16,
-    * measured with tools/ProfilePq.) */
+    * measured at sf0.01; PERF.md.) */
   def encode(vecCol: Column, cbs: Array[Array[Array[Double]]]): Column =
     graft.functions.PqEncodeExpr(vecCol, cbs)
 

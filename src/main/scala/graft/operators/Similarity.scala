@@ -65,7 +65,7 @@ object Similarity {
         // pair BEFORE the id< conjunct can drop it — without the guard
         // the dot product runs on all n² ordered pairs (self + both
         // orders) instead of the n²/2 the join keeps (the
-        // text_fuzzy_pairs finding, FuzzyProbe)
+        // text_fuzzy_pairs finding, PERF.md)
         when(col("id_a") < col("id_b"),
           dot(col("vec_a"), col("vec_b")) / (col("nrm_a") * col("nrm_b")))
           .as("score"))

@@ -505,7 +505,7 @@ object TextAnalysis {
     *     CASE guard matters: the dist filter gets pushed into the join
     *     condition, which evaluates on EVERY block-bucket match —
     *     including each row's self-match (5050 of 6058 evaluations on
-    *     the fixture, measured via tools/FuzzyProbe; near-identical long
+    *     the fixture, by invocation count — PERF.md; near-identical long
     *     strings are the banded algorithm's worst case at ~0.7 ms/call).
     *     The CASE short-circuits the scorer to ordered pairs only:
     *     6058 → 504 calls, ~4.4 → ~1.2 s.

@@ -937,7 +937,7 @@ object Pipeline {
         .orderBy("id_a", "id_b")),
     // The winnow PAIR SET vs the word-3-gram truth: at k=20/w=16 the
     // winnowed sketch reproduces the jaccard>=0.5 pair set exactly on the
-    // fixtures (measured sf0.01: 25/25, sf0.1: 256/256 — WinnowTune), so
+    // fixtures (measured sf0.01: 25/25, sf0.1: 256/256 — PERF.md), so
     // the pair list is oracle-checkable even though the winnow-jaccard
     // VALUES (fingerprint-set overlap) are not SQL-expressible.
     "dedup_winnow_pairs" -> ((s, dir) =>
@@ -2697,9 +2697,9 @@ object Pipeline {
       // pair partition-locally (O(pairs·log) over the O(n²/4) pair set)
       // before keeping 5 per query; the aggregate replaces that sort with
       // an O(k) insertion scan and map-side partials (measured solo at
-      // sf0.1: 4.59 s → 2.79 s, same-window JobCount). Row-identical to
-      // the window by TopKAggregateSpec's parity proof (same DESC/id-asc
-      // order, unique tids); oracle hash re-verified.
+      // sf0.1: 4.59 s → 2.79 s, same window; OPTIMIZATION_r14.md).
+      // Row-identical to the window by TopKAggregateSpec's parity proof
+      // (same DESC/id-asc order, unique tids); oracle hash re-verified.
       val nn = scored.groupBy("qid", "qlabel")
         .agg(graft.functions.TopKAggregates.topk(
           col("score"), col("tid"), col("tlabel").cast("long"), 5).as("top"))

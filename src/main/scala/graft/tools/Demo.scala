@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.sources.FluvioDuck
 
 /** End-to-end smoke driver for the public API: builds a real local Spark
@@ -10,19 +9,7 @@ import graft.sources.FluvioDuck
 object Demo {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      // default threshold is Int.MaxValue: a huge .limit(n) then allocates
-      // an n-entry top-k buffer per partition (TakeOrderedAndProject);
-      // above this, plans fall back to distributed Sort + GlobalLimit
-      .config("spark.sql.execution.topKSortFallbackThreshold", "100000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Bench.session("4")
 
     println("=== fluvio_topics() ===")
     FluvioDuck.topics(spark, sf).show(20, false)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{Ivf, Similarity}
 import graft.sources.Tables
@@ -18,12 +17,7 @@ object IvfTune {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val nCells = args.lift(1).map(_.toInt).getOrElse(16)
     val k = args.lift(2).map(_.toInt).getOrElse(20)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Bench.session("8")
 
     val embs = Tables.load(spark, sfDir, "embeddings").cache()
     val n = embs.count()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Mechanical disposition of driver-bench "movers" (VERDICT r12 task 4).
   *
   * Problem: the driver's per-round bench runs on a host with roaming

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.Similarity
 import graft.sources.Tables
 
@@ -8,12 +7,7 @@ import graft.sources.Tables
   * settings — picks the bar for SimilaritySpec. */
 object RecallTune {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Bench.session("8")
     val ones = Array.fill(64)(1.0)
     for (sf <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
       "/root/testdata/sf0.1")) {

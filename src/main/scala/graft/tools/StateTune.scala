@@ -52,19 +52,12 @@ object StateTune {
     (math.min(busy.max(0.001), wall), rows)
   }
 
-  private def session(partitions: Int, confs: Map[String, String]): SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", partitions.toString)
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.numRecentProgressUpdates", "100000")
-      .config("spark.ui.enabled", "false")
-    confs.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  /** Shuffle partitions are the state partitions, fixed at the first
+    * batch — the variant axis besides the provider confs. */
+  private def session(partitions: Int, confs: Map[String, String]): SparkSession =
+    graft.Bench.sessionWith("32", Map(
+      "spark.sql.shuffle.partitions" -> partitions.toString,
+      "spark.sql.streaming.numRecentProgressUpdates" -> "100000") ++ confs)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -130,20 +130,13 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cap = sys.env.getOrElse("SPARK_GRAFT_STREAM_CAP", "5000").toLong
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.metricsEnabled", "true")
+    val spark = graft.Bench.sessionWith("32", Map(
+      "spark.sql.streaming.metricsEnabled" -> "true",
       // recentProgress retains only the last N updates (default 100);
       // a tight trigger cap produces more data batches than that and
       // the artifact would silently describe a SUFFIX of the drain
       // while claiming the whole — retain enough for any cap
-      .config("spark.sql.streaming.numRecentProgressUpdates", "100000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      "spark.sql.streaming.numRecentProgressUpdates" -> "100000"))
 
     val capped = drain(spark, sfDir, "events", Some(cap))
     val unthrottled = drain(spark, sfDir, "events", None)

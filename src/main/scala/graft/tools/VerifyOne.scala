@@ -1,25 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump a single SparkEntry query (same session config as graft.Verify):
   * `sbt "runMain graft.tools.VerifyOne <name> <sfDir> <outDir>"` */
 object VerifyOne {
   def main(args: Array[String]): Unit = {
     val Array(name, sfDir, outDir) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      // default threshold is Int.MaxValue: a huge .limit(n) then allocates
-      // an n-entry top-k buffer per partition (TakeOrderedAndProject);
-      // above this, plans fall back to distributed Sort + GlobalLimit
-      .config("spark.sql.execution.topKSortFallbackThreshold", "100000")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Verify.session()
     graft.SparkEntry.queries(name)(spark, sfDir)
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     // merge this entry's oracle into outDir/oracle_sql.json so

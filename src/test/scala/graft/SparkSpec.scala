@@ -11,19 +11,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** The config that ships (the bench's), on 4 cores. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      // default threshold is Int.MaxValue: a huge .limit(n) then allocates
-      // an n-entry top-k buffer per partition (TakeOrderedAndProject);
-      // above this, plans fall back to distributed Sort + GlobalLimit
-      .config("spark.sql.execution.topKSortFallbackThreshold", "100000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Bench.sessionWith("4", Map("spark.app.name" -> "graft-test"))
     s.sparkContext.setLogLevel("WARN")
     s
   }

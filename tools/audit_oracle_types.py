@@ -3,6 +3,10 @@
 
 Usage: python3 tools/audit_oracle_types.py <sfDir> <oracleJsonDir>
 
+<oracleJsonDir> is a graft.Verify output directory: Verify writes every
+entry's oracle to oracle_sql.json, also when its entry list (third
+argument) names no entry and nothing is dumped.
+
 DESCRIBEs each oracle (no execution) with fixture tables registered and
 flags any result column whose DuckDB type is outside the portable set.
 The r07 driver-host lesson: an uncast `sum(BIGINT)` is HUGEINT (int128) —
