@@ -5,22 +5,28 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.schema.LogicalTypeAnnotation
-import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
+import org.apache.hadoop.mapred.FileSplit
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
+import org.apache.parquet.io.LocalInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+import org.apache.parquet.schema.MessageType
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxBytes, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxBytes, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarArray, ColumnarBatch, ColumnarMap}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.sources.{ConsumeOpt, RecordView, TopicRegistry}
 
@@ -122,10 +128,44 @@ object FluvioDsv2 {
         !f.getName.startsWith(".") && f.getName.endsWith(".parquet"))
       .sortBy(f => (f.lastModified(), f.getName)).toSeq
 
-  // footer row counts, keyed by (path, mtime, length) — segments are
-  // immutable once written, so this never goes stale
-  private val rowCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Long]()
+  /** What a segment's footer says: each row group's first row and first
+    * byte, the file length, and the column types. */
+  final case class Segment(rows: Long, groupRows: Array[Long],
+                           groupBytes: Array[Long], length: Long,
+                           schema: MessageType) {
+    /** The row groups holding file rows [lo, hi): the first one's first
+      * row, and a byte range holding exactly their midpoints — parquet-mr
+      * picks a split's row groups by midpoint. */
+    def groupRange(lo: Long, hi: Long): (Long, Long, Long) = {
+      val g0 = groupRows.lastIndexWhere(_ <= lo)
+      val g1 = groupRows.lastIndexWhere(_ < hi)
+      (groupRows(g0), groupBytes(g0),
+        if (g1 + 1 < groupBytes.length) groupBytes(g1 + 1) else length)
+    }
+
+    /** How column `col` stores time: `int96`, or the unit of an INT64
+      * column (`millis`/`micros`/`nanos`; un-annotated INT64 counts as
+      * micros). */
+    def tsUnit(col: String): String =
+      schema.getFields.asScala.find(_.getName.equalsIgnoreCase(col))
+        .filter(_.isPrimitive).map(_.asPrimitiveType) match {
+        case Some(t) if t.getPrimitiveTypeName == PrimitiveTypeName.INT96 => "int96"
+        case Some(t) => t.getLogicalTypeAnnotation match {
+          case ts: TimestampLogicalTypeAnnotation => ts.getUnit match {
+            case TimeUnit.MILLIS => "millis"
+            case TimeUnit.MICROS => "micros"
+            case TimeUnit.NANOS  => "nanos"
+          }
+          case _ => "micros"
+        }
+        case None => "micros"
+      }
+  }
+
+  // footers, keyed by (path, mtime, length) — segments are immutable once
+  // written, so this never goes stale
+  private val segmentCache =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Segment]()
 
   /** PLANNER-side footer parses actually performed (cache misses) —
     * the steady-state contract is that `latestOffset` on an unchanged
@@ -137,15 +177,20 @@ object FluvioDsv2 {
     * is the scan itself, not planning overhead, and is not counted.) */
   val footerParses = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  def rowCount(f: File): Long =
-    rowCountCache.computeIfAbsent(
+  def segment(f: File): Segment =
+    segmentCache.computeIfAbsent(
       (f.getAbsolutePath, f.lastModified(), f.length()),
-      _ => {
+      key => {
         footerParses.incrementAndGet()
-        val r = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new Path(f.getAbsolutePath), new Configuration()))
-        try r.getRecordCount finally r.close()
+        val r = ParquetFileReader.open(new LocalInputFile(f.toPath))
+        try {
+          val groups = r.getRowGroups.asScala.toArray
+          Segment(r.getRecordCount, groups.map(_.getRowCount).scanLeft(0L)(_ + _).init,
+            groups.map(_.getStartingPos), key._3, r.getFileMetaData.getSchema)
+        } finally r.close()
       })
+
+  def rowCount(f: File): Long = segment(f).rows
 
   /** Current LEO (record count) per partition. */
   def leo(baseDir: String, topic: String): Map[Int, Long] =
@@ -170,26 +215,64 @@ object FluvioDsv2 {
 
   /** Map the record range [from, to) of topic partition `p` onto its
     * segment files by cumulative row count — only overlapping segments
-    * become input partitions. The ONE range→file mapping, shared by the
-    * micro-batch planner and the batch scan (a mapping bug cannot make
-    * the two faces read different records). */
-  def sliceSegments(files: Seq[File], p: Int, from: Long, to: Long,
+    * become input partitions, each ranged to the row groups it needs.
+    * The ONE range→file mapping, shared by the micro-batch planner and
+    * the batch scan (a mapping bug cannot make the two faces read
+    * different records). */
+  def sliceSegments(topic: String, files: Seq[File], p: Int, from: Long, to: Long,
                     view: RecordView, fields: Seq[String]): Seq[FluvioInputPartition] = {
     val parts = Seq.newBuilder[FluvioInputPartition]
     var cum = 0L
     for (f <- files) {
-      val n = rowCount(f)
+      val seg = segment(f)
       val fileStart = cum
-      val fileEnd = cum + n
+      val fileEnd = cum + seg.rows
       val lo = math.max(from, fileStart)
       val hi = math.min(to, fileEnd)
-      if (hi > lo)
-        parts += FluvioInputPartition(f.getAbsolutePath, p,
-          skip = lo - fileStart, take = hi - lo,
-          view.offsetCol, view.timestampCol, view.valueCol, fields)
+      if (hi > lo) {
+        val (firstRow, byteStart, byteEnd) = seg.groupRange(lo - fileStart, hi - fileStart)
+        parts += FluvioInputPartition(topic, f.getAbsolutePath, p,
+          skip = lo - fileStart, take = hi - lo, firstRow, byteStart, byteEnd,
+          view, seg.tsUnit(view.timestampCol), fields)
+      }
       cum = fileEnd
     }
     parts.result()
+  }
+
+  /** Rows per columnar batch: Spark's default parquet batch size. */
+  val BatchRows = 4096
+
+  /** The file columns a slice reads, typed for the vectorized reader:
+    * offsets as LONG (an INT32 column widens), timestamps as the stored
+    * LONG (scaled to µs by the reader) or, for INT96, as TIMESTAMP, and
+    * values as STRING (an un-annotated BINARY column reads as one). */
+  def requestedSchema(view: RecordView, fields: Seq[String], int96: Boolean): StructType =
+    StructType(fields.collect {
+      case "offset"    => StructField(view.offsetCol, LongType)
+      case "timestamp" => StructField(view.timestampCol, if (int96) TimestampType else LongType)
+      case "value"     => StructField(view.valueCol, StringType)
+    })
+
+  /** The Hadoop conf of one scan: only the keys Spark's parquet reader
+    * reads (topics are local files, so no file-system settings), with
+    * fixed values so that results do not depend on the session — NANOS
+    * timestamps read as longs (the reader divides them), un-annotated
+    * BINARY reads as a string. It loads no default resources, so it
+    * costs no XML parse and ships in a few hundred bytes. The requested
+    * schema is the one of INT64-timestamp segments; a slice of an INT96
+    * segment reads through a copy with its own. */
+  def scanConf(view: RecordView, fields: Seq[String]): Configuration = {
+    val conf = new Configuration(false)
+    conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA,
+      requestedSchema(view, fields, int96 = false).json)
+    conf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key, true)
+    conf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, true)
+    conf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, true)
+    conf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key, false)
+    conf.setBoolean(SQLConf.CASE_SENSITIVE.key, false)
+    conf
   }
 
   private[v2] val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -388,16 +471,13 @@ class FluvioBatch(opt: ConsumeOpt, view: RecordView, baseDir: String,
       val (start, until) = opt.window(files.map(FluvioDsv2.rowCount).sum)
       val from = math.max(start, offLo)
       val to = math.min(until, offHi)
-      if (to > from) FluvioDsv2.sliceSegments(files, p, from, to, view, fields)
+      if (to > from) FluvioDsv2.sliceSegments(opt.topic, files, p, from, to, view, fields)
       else Seq.empty
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-        new FluvioPartitionReader(partition.asInstanceOf[FluvioInputPartition])
-    }
+    new FluvioReaderFactory(view, fields)
 }
 
 class FluvioMicroBatchStream(opt: ConsumeOpt, view: RecordView, baseDir: String,
@@ -537,8 +617,7 @@ class FluvioMicroBatchStream(opt: ConsumeOpt, view: RecordView, baseDir: String,
       val extra = math.min(backlog(p) - recs(p), (leftover / bpr(p)).toLong)
       if (extra > 0L) { recs(p) += extra; leftover -= extra * bpr(p) }
     }
-    val ends = backlog.map { case (p, b) =>
-      p -> (start.getOrElse(p, 0L) + recs(p)) }
+    val ends = backlog.keys.map(p => p -> (start.getOrElse(p, 0L) + recs(p))).toMap
     val admitted = recs.values.sum
     if (admitted == 0L && backlog.values.sum > 0L) {
       val p = backlog.filter(_._2 > 0L).keys.min
@@ -621,121 +700,150 @@ class FluvioMicroBatchStream(opt: ConsumeOpt, view: RecordView, baseDir: String,
     for ((p, to) <- e.toSeq.sortBy(_._1)) {
       val from0 = s.getOrElse(p, 0L)
       if (to > from0)
-        parts ++= FluvioDsv2.sliceSegments(filesByPart.getOrElse(p, Seq.empty),
-          p, from0, to, view, fields)
+        parts ++= FluvioDsv2.sliceSegments(opt.topic,
+          filesByPart.getOrElse(p, Seq.empty), p, from0, to, view, fields)
     }
     parts.result().toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-        new FluvioPartitionReader(partition.asInstanceOf[FluvioInputPartition])
-    }
+    new FluvioReaderFactory(view, fields)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
 /** One segment-file slice: rows [skip, skip+take) of `path`, belonging to
-  * topic partition `partitionId`. */
-case class FluvioInputPartition(path: String, partitionId: Int,
+  * topic partition `partitionId`. The slice reads the byte range
+  * [byteStart, byteEnd), which holds the row groups from file row
+  * `firstRow` on; `tsUnit` is how the segment stores time
+  * ([[FluvioDsv2.Segment.tsUnit]]). */
+case class FluvioInputPartition(topic: String, path: String, partitionId: Int,
                                 skip: Long, take: Long,
-                                offsetCol: String, tsCol: String,
-                                valueCol: String,
+                                firstRow: Long, byteStart: Long, byteEnd: Long,
+                                view: RecordView, tsUnit: String,
                                 fields: Seq[String]) extends InputPartition
 
-/** Executor-side reader: parquet example API (Group) — record-at-a-time
-  * over one segment slice, no Spark-internal reader dependencies. The
-  * timestamp unit (ms/µs/ns) is read from the file's logical type
-  * annotation and normalized to Spark's µs. */
-class FluvioPartitionReader(p: FluvioInputPartition)
-    extends PartitionReader[InternalRow] {
+/** Reader factory of one scan: ships the scan's Hadoop conf with the
+  * plan and reads every slice columnar. */
+class FluvioReaderFactory(conf: SerializableConfiguration) extends PartitionReaderFactory {
+  def this(view: RecordView, fields: Seq[String]) =
+    this(new SerializableConfiguration(FluvioDsv2.scanConf(view, fields)))
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("fluvio slices are read columnar only")
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
+    new FluvioColumnarReader(partition.asInstanceOf[FluvioInputPartition], conf.value)
+}
 
-  private val reader: ParquetReader[Group] =
-    ParquetReader.builder(new GroupReadSupport(), new Path(p.path)).build()
-  private var skipped = 0L
-  private var delivered = 0L
-  private var current: Group = _
-  // timestamp extractor (handles INT64 ms/µs/ns annotations AND the
-  // legacy INT96 julian-day encoding Spark writes by default), resolved
-  // once from the first record's schema
-  private var tsMicrosOf: Group => Long = _
+/** Executor-side reader: Spark's `VectorizedParquetRecordReader` over
+  * one segment slice, reading only the pruned file columns of the row
+  * groups the slice needs (a Spark-internal reader; DsvReaderCanarySpec
+  * pins the API it relies on). `partition` is a constant vector. The
+  * rows before `skip` in the first batch are dropped by a row-index
+  * shift, and the last batch is cut by its row count, so no per-row
+  * object is built. Timestamps are normalized to Spark's µs: INT96 reads
+  * with no calendar rebase (the raw julian-day arithmetic), INT64 reads
+  * as the stored long and is scaled by its unit. */
+class FluvioColumnarReader(p: FluvioInputPartition, shared: Configuration)
+    extends PartitionReader[ColumnarBatch] {
+
+  private val requested = FluvioDsv2.requestedSchema(p.view, p.fields, p.tsUnit == "int96")
+
+  private val reader: VectorizedParquetRecordReader = {
+    val key = ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA
+    val conf =
+      if (shared.get(key) == requested.json) shared
+      else { val c = new Configuration(shared); c.set(key, requested.json); c }
+    val r = new VectorizedParquetRecordReader(null, "CORRECTED", "UTC", "CORRECTED",
+      "UTC", false, FluvioDsv2.BatchRows)
+    try {
+      r.initialize(new FileSplit(new Path(p.path), p.byteStart, p.byteEnd - p.byteStart,
+        Array.empty[String]), new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+      r.initBatch(StructType(Seq(StructField("partition", IntegerType))),
+        new GenericInternalRow(Array[Any](p.partitionId)))
+    } catch { case e: Throwable => r.close(); throw e }
+    r
+  }
+  private val raw = reader.resultBatch()
+
+  // per output field: its column in `raw` (the partition constant comes
+  // after the file columns), its type and its µs scale (multiply, divide)
+  private val (mul, div) = p.tsUnit match {
+    case "millis" => (1000L, 1L)
+    case "nanos"  => (1L, 1000L)
+    case _        => (1L, 1L)
+  }
+  private val columns: Seq[(Int, DataType, Long, Long)] = p.fields.map {
+    case "partition" => (requested.length, IntegerType, 1L, 1L)
+    case "timestamp" => (requested.fieldIndex(p.view.timestampCol), TimestampType, mul, div)
+    case f =>
+      val c = if (f == "offset") p.view.offsetCol else p.view.valueCol
+      (requested.fieldIndex(c), FluvioDsv2.Schema(f).dataType, 1L, 1L)
+  }
+  private val offsetIdx =
+    if (p.fields.contains("offset")) requested.fieldIndex(p.view.offsetCol) else -1
+
+  private var row = p.firstRow // file row of the next batch's first row
+  private var left = p.take    // rows still to deliver
+  private var current: ColumnarBatch = _
 
   override def next(): Boolean = {
-    if (delivered >= p.take) return false
-    while (skipped < p.skip) {
-      if (reader.read() == null) return false
-      skipped += 1
-    }
-    current = reader.read()
-    if (current == null) return false
-    delivered += 1
-    true
-  }
-
-  private def resolveTsExtractor(g: Group): Group => Long = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    val t = g.getType
-    val idx = t.getFieldIndex(p.tsCol)
-    val prim = t.getType(idx).asPrimitiveType()
-    if (prim.getPrimitiveTypeName == PrimitiveTypeName.INT96) {
-      // INT96: 8 bytes little-endian nanos-of-day + 4 bytes julian day
-      (grp: Group) => {
-        val buf = java.nio.ByteBuffer
-          .wrap(grp.getInt96(idx, 0).getBytes)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        val nanosOfDay = buf.getLong
-        val julianDay = buf.getInt
-        (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
-      }
-    } else {
-      val factor: Long => Long =
-        prim.getLogicalTypeAnnotation match {
-          case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-            ts.getUnit match {
-              case TimeUnit.MILLIS => v => v * 1000L
-              case TimeUnit.MICROS => v => v
-              case TimeUnit.NANOS  => v => v / 1000L
-            }
-          case _ => v => v
-        }
-      (grp: Group) => factor(grp.getLong(idx, 0))
-    }
-  }
-
-  override def get(): InternalRow = {
-    val g = current
-    if (tsMicrosOf == null) tsMicrosOf = resolveTsExtractor(g)
-    val t = g.getType
-    def present(name: String): Boolean =
-      g.getFieldRepetitionCount(t.getFieldIndex(name)) > 0
-    def longOf(name: String): Long = {
-      val idx = t.getFieldIndex(name)
-      t.getType(idx).asPrimitiveType().getPrimitiveTypeName match {
-        case org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32 =>
-          g.getInteger(idx, 0).toLong
-        case _ => g.getLong(idx, 0)
+    while (left > 0 && reader.nextBatch()) {
+      val n = raw.numRows
+      val first = row
+      row += n
+      val drop = math.min(n.toLong, math.max(0L, p.skip - first)).toInt
+      if (drop < n) {
+        val k = math.min((n - drop).toLong, left).toInt
+        left -= k
+        if (offsetIdx >= 0) checkOffsets(raw.column(offsetIdx), drop, k, first)
+        current = new ColumnarBatch(columns.map { case (i, dt, m, d) =>
+          val v = raw.column(i)
+          if (drop == 0 && m == 1L && d == 1L) v else new SliceVector(v, drop, m, d, dt)
+        }.toArray, k)
+        return true
       }
     }
-    // offsets are dense by the log model — a null offset is corrupt data
-    // and must fail loudly; timestamp/value are nullable in the advertised
-    // schema, so null cells pass through as nulls (the example-API getters
-    // throw on absent fields instead of returning null). Only the PRUNED
-    // fields materialize: a `SELECT offset` stream never builds the value
-    // string (SupportsPushDownRequiredColumns).
-    val vals: Array[Any] = p.fields.map {
-      case "partition" => p.partitionId: Any
-      case "offset"    => longOf(p.offsetCol): Any
-      case "timestamp" => if (present(p.tsCol)) tsMicrosOf(g): Any else null
-      case "value" =>
-        if (present(p.valueCol)) UTF8String.fromString(g.getString(p.valueCol, 0))
-        else null
-      case other =>
-        throw new IllegalStateException(s"unknown pruned field `$other`")
-    }.toArray
-    new GenericInternalRow(vals)
+    false
   }
+
+  /** Offsets are dense log positions: a null one is corrupt data, and a
+    * column vector would quietly read it as 0. */
+  private def checkOffsets(v: ColumnVector, drop: Int, k: Int, first: Long): Unit =
+    if (v.hasNull) for (i <- drop until drop + k if v.isNullAt(i))
+      throw new IllegalStateException(
+        s"fluvio topic '${p.topic}' partition ${p.partitionId}: null offset at " +
+          s"row ${first + i} of segment ${p.path}; offsets must be dense log " +
+          "positions, so the segment is corrupt")
+
+  override def get(): ColumnarBatch = current
 
   override def close(): Unit = reader.close()
+}
+
+/** `base` seen from row `shift` on, its longs scaled by `mul` then `div`:
+  * drops a batch's leading rows and normalizes a timestamp unit to µs
+  * without copying. */
+private final class SliceVector(base: ColumnVector, shift: Int, mul: Long, div: Long,
+                                dt: DataType) extends ColumnVector(dt) {
+  override def close(): Unit = ()
+  override def hasNull(): Boolean = base.hasNull
+  override def numNulls(): Int = base.numNulls // of the whole base batch: an upper bound
+  override def isNullAt(r: Int): Boolean = base.isNullAt(r + shift)
+  override def getBoolean(r: Int): Boolean = base.getBoolean(r + shift)
+  override def getByte(r: Int): Byte = base.getByte(r + shift)
+  override def getShort(r: Int): Short = base.getShort(r + shift)
+  override def getInt(r: Int): Int = base.getInt(r + shift)
+  override def getLong(r: Int): Long = base.getLong(r + shift) * mul / div
+  override def getFloat(r: Int): Float = base.getFloat(r + shift)
+  override def getDouble(r: Int): Double = base.getDouble(r + shift)
+  override def getArray(r: Int): ColumnarArray = base.getArray(r + shift)
+  override def getMap(r: Int): ColumnarMap = base.getMap(r + shift)
+  override def getDecimal(r: Int, precision: Int, scale: Int): Decimal =
+    base.getDecimal(r + shift, precision, scale)
+  override def getUTF8String(r: Int): UTF8String = base.getUTF8String(r + shift)
+  override def getBinary(r: Int): Array[Byte] = base.getBinary(r + shift)
+  override def getChild(i: Int): ColumnVector =
+    throw new UnsupportedOperationException("fluvio record columns are flat")
 }

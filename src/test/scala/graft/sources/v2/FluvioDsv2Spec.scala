@@ -146,6 +146,128 @@ class FluvioDsv2Spec extends SparkSpec {
     } finally q.stop()
   }
 
+  /** Move `df`'s one part file to `topicDir/name` with mtime `mtime`, so
+    * segment order is fixed by the test, not by the clock. */
+  private def writeSegment(df: org.apache.spark.sql.DataFrame, topicDir: java.io.File,
+                           name: String, mtime: Long): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory("dsv2_seg").toFile
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
+    val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
+    val seg = new java.io.File(topicDir, name)
+    java.nio.file.Files.move(part.toPath, seg.toPath)
+    seg.setLastModified(mtime)
+  }
+
+  /** Every record of a topic through both faces, as (offset, µs, value). */
+  private def bothFaces(cmd: String, dir: String): (Seq[(Long, Long, String)], Seq[(Long, Long, String)]) = {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("offset"), unix_micros(col("timestamp")), col("value")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sortBy(_._1).toSeq
+    val batch = rows(spark.read.format(fmt).option("cmd", cmd).option("baseDir", dir).load())
+    val (name, q) = startQuery(cmd, dir)
+    try q.processAllAvailable() finally q.stop()
+    (batch, rows(spark.table(name)))
+  }
+
+  test("timestamp encodings and column types: ms/µs/INT96/ns segments, INT32 offsets, " +
+      "un-annotated BINARY values, one topic, both faces") {
+    val dir = java.nio.file.Files.createTempDirectory("dsv2_types").toFile
+    val topicDir = new java.io.File(dir, "events.parquet")
+    topicDir.mkdirs()
+    val src = Tables.load(spark, sf, "events").filter(col("event_id") < 50)
+      .withColumn("ts", col("ts").cast("timestamp")) // the fixture's is NTZ
+    val n = Tables.load(spark, sf, "events").count()
+    def shifted(by: Long) = src.withColumn("event_id", col("event_id") + by)
+    // segment 0: the fixture file itself (INT64 µs, not UTC-adjusted)
+    val seg0 = new java.io.File(topicDir, "seg-0.parquet")
+    java.nio.file.Files.copy(new java.io.File(Tables.path(sf, "events")).toPath, seg0.toPath)
+    seg0.setLastModified(1000000L)
+    val key = "spark.sql.parquet.outputTimestampType"
+    val was = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "TIMESTAMP_MILLIS")
+      writeSegment(shifted(n).withColumn("event_id", col("event_id").cast("int")),
+        topicDir, "seg-1.parquet", 2000000L)
+      spark.conf.set(key, "TIMESTAMP_MICROS")
+      writeSegment(shifted(n + 50).withColumn("props", col("props").cast("binary")),
+        topicDir, "seg-2.parquet", 3000000L)
+      spark.conf.set(key, "INT96")
+      writeSegment(shifted(n + 100), topicDir, "seg-3.parquet", 4000000L)
+    } finally spark.conf.set(key, was)
+    // segment 4: INT64 TIMESTAMP(NANOS), which Spark does not write
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val schema = Types.buildMessage()
+      .required(PrimitiveTypeName.INT64).named("event_id")
+      .optional(PrimitiveTypeName.INT64)
+      .as(LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.NANOS)).named("ts")
+      .optional(PrimitiveTypeName.BINARY).as(LogicalTypeAnnotation.stringType()).named("props")
+      .named("record")
+    val srcRows = src.orderBy("event_id")
+      .select(col("event_id"), unix_micros(col("ts")), col("props")).collect()
+    val seg4 = new java.io.File(topicDir, "seg-4.parquet")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.parquet.io.LocalOutputFile(seg4.toPath)).withType(schema).build()
+    val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+    try srcRows.foreach { r =>
+      w.write(groups.newGroup().append("event_id", r.getLong(0) + n + 150)
+        .append("ts", r.getLong(1) * 1000L).append("props", r.getString(2)))
+    } finally w.close()
+    seg4.setLastModified(5000000L)
+
+    // what each segment holds, read by Spark's own parquet scan (the ns
+    // segment: the source rows it was written from)
+    def viaSpark(f: java.io.File) = spark.read.parquet(f.getAbsolutePath)
+      .select(col("event_id").cast("long"), unix_micros(col("ts").cast("timestamp")),
+        col("props").cast("string"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
+    val segs = topicDir.listFiles().filter(_.getName.startsWith("seg-")).sortBy(_.getName)
+    val want = (segs.take(4).flatMap(viaSpark) ++
+      srcRows.map(r => (r.getLong(0) + n + 150, r.getLong(1), r.getString(2)))).sortBy(_._1).toSeq
+    assert(want.map(_._1) == (0L until n + 200L), diff(want.map(_._1), 0L until n + 200L))
+    // the millisecond segment really is ms-truncated, so the unit matters
+    assert(want.slice(n.toInt, n.toInt + 50).forall(_._2 % 1000L == 0L))
+
+    def diff[T](got: Seq[T], exp: Seq[T]): String =
+      s"${got.size} rows, want ${exp.size}; first difference: " +
+        got.zip(exp).find { case (g, e) => g != e }
+    val (batch, stream) = bothFaces("events -B --rows 100000", dir.getAbsolutePath)
+    assert(batch == want, "batch face: " + diff(batch, want))
+    assert(stream == want, "stream face: " + diff(stream, want))
+    // a pruned read (no value column) sees the same timestamps
+    val pruned = spark.read.format(fmt).option("cmd", "events -B --rows 100000")
+      .option("baseDir", dir.getAbsolutePath).load()
+      .select(col("offset"), unix_micros(col("timestamp"))).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    assert(pruned == want.map(r => (r._1, r._2)), diff(pruned, want.map(r => (r._1, r._2))))
+  }
+
+  test("a null offset fails the batch and the stream face, naming topic, partition, segment and row") {
+    val dir = java.nio.file.Files.createTempDirectory("dsv2_nulloff").toFile
+    val topicDir = new java.io.File(dir, "events.parquet")
+    topicDir.mkdirs()
+    writeSegment(Tables.load(spark, sf, "events").filter(col("event_id") < 10)
+      .withColumn("event_id", when(col("event_id") === 6, lit(null)).otherwise(col("event_id"))),
+      topicDir, "seg-0.parquet", 1000000L)
+    val seg = new java.io.File(topicDir, "seg-0.parquet").getAbsolutePath
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    def check(msg: String): Unit = {
+      assert(msg.contains("fluvio topic 'events' partition 0: null offset at row 6 " +
+        s"of segment $seg"), msg)
+    }
+    check(messages(intercept[Exception](
+      spark.read.format(fmt).option("cmd", "events -B").option("baseDir", dir.getAbsolutePath)
+        .load().collect())))
+    // rows before the null one are still deliverable
+    assert(spark.read.format(fmt).option("cmd", "events -B --end 5")
+      .option("baseDir", dir.getAbsolutePath).load().count() == 6L)
+    val (_, q) = startQuery("events -B", dir.getAbsolutePath)
+    try check(messages(intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      q.processAllAvailable())))
+    finally q.stop()
+  }
+
   test("restart from checkpoint resumes at the committed log offsets (no re-delivery)") {
     val (dir, topicDir) = mkTopic("dsv2_restart", 80)
     val ckpt = java.nio.file.Files.createTempDirectory("dsv2_ckpt").toString
