@@ -61,8 +61,8 @@ final case class ConsumeOpt(
     * the cap is `until <= from + rows`). `--end` and `--rows` saturate at
     * `Long.MaxValue`, so their largest values mean "no bound". The window
     * is empty when `until <= from`. The one place this arithmetic lives:
-    * the DSv2 batch planner, the micro-batch stream's start and ends, and
-    * the `-d` plan all call it. */
+    * the DSv2 batch planner and the micro-batch stream's starts call it,
+    * the stream's ends call [[until]]. */
   def window(leo: Long): (Long, Long) = {
     val from = startOffset match {
       case OffsetSpec.FromBeginning(n) => n
@@ -70,9 +70,15 @@ final case class ConsumeOpt(
       case OffsetSpec.FromEnd(n)       => math.max(0L, leo - n)
       case OffsetSpec.End              => leo
     }
+    (from, until(from, leo))
+  }
+
+  /** The end of [[window]] from a fixed start: the micro-batch stream's
+    * bind-time start keeps `-T`/default-end windows put as the log grows. */
+  def until(from: Long, leo: Long): Long = {
     val endExclusive = end.fold(Long.MaxValue)(e => if (e == Long.MaxValue) e else e + 1)
     val capped = if (from > Long.MaxValue - rows) Long.MaxValue else from + rows
-    (from, math.min(leo, math.min(endExclusive, capped)))
+    math.min(leo, math.min(endExclusive, capped))
   }
 
   /** `end >= start` validation (`/root/reference/src/consume.rs:581-589`). */
@@ -176,7 +182,7 @@ object ConsumeOpt {
           Left(s"error: invalid value '$v' for '$flag': not a number")
       }
 
-    def parseKeyVal(flag: String, v: String): Either[String, (String, String)] = {
+    def parseKeyVal(v: String): Either[String, (String, String)] = {
       val pos = v.indexOf('=')
       if (pos < 0) Left(s"invalid KEY=value: no `=` found in `$v`")
       else Right((v.substring(0, pos), v.substring(pos + 1)))
@@ -249,7 +255,7 @@ object ConsumeOpt {
             }
           case "aggregate-initial" => opt = opt.copy(aggregateInitial = Some(v))
           case "params" =>
-            parseKeyVal(flagTok, v) match {
+            parseKeyVal(v) match {
               case Left(e)   => return Left(e)
               case Right(kv) => opt = opt.copy(params = opt.params :+ kv)
             }
@@ -263,7 +269,7 @@ object ConsumeOpt {
           case "transforms-file"  => opt = opt.copy(transformsFile = Some(v)); seen += "transforms-file"
           case "transform"        => opt = opt.copy(transforms = opt.transforms :+ v); seen += "transform"
           case "columns" =>
-            parseKeyVal(flagTok, v) match {
+            parseKeyVal(v) match {
               case Left(e) => return Left(e)
               case Right((name0, path)) =>
                 ColumnMapping.parse(name0, path) match {

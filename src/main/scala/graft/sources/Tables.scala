@@ -6,11 +6,12 @@ import org.apache.spark.sql.types.LongType
 
 /** Central loader for the fixture tables.
   *
-  * The `events` table stores `ts` as parquet TIMESTAMP(NANOS), which Spark
-  * only reads via `spark.sql.legacy.parquet.nanosAsLong` (as a Long of
-  * nanos). We flip that conf on the session (runtime-settable) and convert
-  * ns → µs TimestampType here, losslessly for the fixture's µs-precision
-  * values, so every downstream operator sees a normal TimestampType column.
+  * The fixtures store `events.ts` as INT64 TIMESTAMP(MICROS) with
+  * isAdjustedToUTC=false, so `load` returns a TIMESTAMP_NTZ column: cast it
+  * to `timestamp` before functions such as `unix_micros`. A TIMESTAMP(NANOS)
+  * `ts` (no fixture has one) reads under `nanosAsLong`, which `load` sets on
+  * the session, and becomes a µs TimestampType. Consumes, batch and `-d`,
+  * do not call `load`: the `fluvio` source fixes its own reader conf.
   */
 object Tables {
   def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"

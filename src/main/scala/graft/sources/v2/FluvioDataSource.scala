@@ -43,8 +43,8 @@ import graft.sources.{ConsumeOpt, RecordView, TopicRegistry}
   *
   * Fixed record schema, like the Kafka source: (partition INT, offset
   * LONG, timestamp TIMESTAMP, value STRING). Column projection and
-  * transform chains compose on top (they are plan-level); the `--rows`
-  * bounded-pull semantics live in [[graft.streaming.ConsumeStream]].
+  * transform chains compose on top (they are plan-level). `-d` consumes
+  * ([[graft.streaming.ConsumeStream]]) read through this face.
   *
   * Offset model: a topic partition is an append-only sequence of parquet
   * segment files with DENSE record offsets; the stream offset per
@@ -55,7 +55,8 @@ import graft.sources.{ConsumeOpt, RecordView, TopicRegistry}
   * new segments — never a rescan of the topic. Bind-time offset flags
   * follow the reference: `-B`/`-H n`/`--start n` → absolute starts,
   * `-T n`/default-end → relative to the log end AS OF STREAM START (the
-  * reference computes the start offset once at bind, consume.rs:580-605).
+  * reference computes the start offset once at bind, consume.rs:580-605);
+  * the starts are kept in the checkpoint, so a restart keeps the window.
   *
   * Admission control (the 100 TB guard): `.option("maxRecordsPerTrigger",
   * n)` caps each micro-batch at n records, split across partitions
@@ -199,8 +200,7 @@ object FluvioDsv2 {
     }
 
   /** The one partition-selection contract, used by the batch and
-    * micro-batch faces of the source and, as a filter on the hive
-    * `partition` column, by the `-d` file stream. Single-partition topics
+    * micro-batch faces of the source. Single-partition topics
     * (no `partition=N` subdirs): `-p`/`-A` are accepted and ignored,
     * matching the reference's consumer pinned to partition 0 regardless
     * of flags (reference `src/consume.rs:179`). Multi-partition
@@ -240,7 +240,7 @@ object FluvioDsv2 {
     parts.result()
   }
 
-  /** Rows per columnar batch: Spark's default parquet batch size. */
+  /** Most rows per columnar batch: Spark's default parquet batch size. */
   val BatchRows = 4096
 
   /** The file columns a slice reads, typed for the vectorized reader:
@@ -340,39 +340,25 @@ class FluvioTable(cmd: String, baseDir: String,
     // table properties.
     val maxPerTrigger = options.getLong("maxRecordsPerTrigger", 0L)
     val maxBytesPerTrigger = options.getLong("maxBytesPerTrigger", 0L)
-    // `--rows` on the BATCH face: honored in segment planning by default
-    // — the raw relation delivers the first `rows` records of the window
-    // PER PARTITION (dense offsets make the cap a row-range, so a
-    // `--rows 500` consume of a deep topic PLANS ~500 rows; under `-A`
-    // the cap is per partition, like the end-relative windows — the
-    // reference is single-partition, consume.rs:179, so the axis has no
-    // reference semantics to diverge from). `rowsCap=false` opts out:
-    // the consume wrapper sets it when a cardinality-CHANGING transform
-    // chain must count post-transform rows (the cap then applies after
-    // the chain, outside the scan). Streaming admission is a different
-    // axis (maxRecordsPerTrigger above); the micro-batch face never
-    // row-caps.
-    val rowsCap = options.getBoolean("rowsCap", true)
+    // `--rows` as a row range PER PARTITION (dense offsets: a `--rows 500`
+    // consume of a deep topic PLANS ~500 rows; per partition under `-A`,
+    // an axis the single-partition reference, consume.rs:179, lacks). The
+    // batch face caps unless `rowsCap=false`, set by the consume wrappers
+    // when a cardinality-CHANGING chain counts post-transform rows; the
+    // micro-batch face caps only on `rowsCap=true` (the `-d` wrapper's
+    // map-only chains), as a stream's default bound is admission control.
+    val rowsCap = Option(options.get("rowsCap")).map(_.toBoolean)
     // COLUMN PRUNING, two routes to the same reader projection: the
-    // explicit `columns` option (a stream that needs only `offset` must
-    // not pay value-string materialization — on a fat-payload topic the
-    // value column IS the byte volume), and the engine's
-    // SupportsPushDownRequiredColumns hook for planners that apply
-    // pushdown to this scan (Spark 4.1's micro-batch planner does NOT —
-    // it plans streaming relations before V2ScanRelationPushDown — so
-    // the option is the operative route today; the hook costs nothing
-    // and picks up planner support when it lands). The pruned schema
-    // flows through the input partitions to the reader, which
-    // materializes ONLY those fields.
+    // `columns` option, and SupportsPushDownRequiredColumns for planners
+    // that push into this scan. The batch planner does; Spark 4.1's
+    // micro-batch planner plans streaming relations before
+    // V2ScanRelationPushDown, so a stream names its columns (the `-d`
+    // wrapper does). The reader materializes ONLY the pruned fields.
     new ScanBuilder with SupportsPushDownRequiredColumns
         with SupportsPushDownFilters {
       private var pruned: StructType = FluvioDsv2.prunedSchema(columns)
       override def pruneColumns(requiredSchema: StructType): Unit = {
-        // observability counter for the canary spec: today's micro-batch
-        // planner never calls this (see comment above) — but the BATCH
-        // planner DOES (V2ScanRelationPushDown runs on batch relations),
-        // so batch `select("offset")` prunes through this interface and
-        // the canary asserts it
+        // counted for DsvPushdownCanarySpec, which pins which planners call it
         FluvioDsv2.pruneColumnsCalls.incrementAndGet()
         pruned = requiredSchema
       }
@@ -432,12 +418,13 @@ class FluvioTable(cmd: String, baseDir: String,
             // source (segment-level planning, not deliver-then-filter) —
             // surfaced here so plan audits can pin it from explain output
             s"CmdWindow: start=${opt.startOffset} end=${opt.end.getOrElse("leo")} " +
-            s"rows=${if (rowsCap) opt.rows.toString else "uncapped"}"
+            s"rows=${if (rowsCap.getOrElse(true)) opt.rows.toString else "uncapped"}"
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
           new FluvioMicroBatchStream(opt, view, baseDir, maxPerTrigger,
-            maxBytesPerTrigger, pruned.fieldNames.toSeq)
+            maxBytesPerTrigger, pruned.fieldNames.toSeq, rowsCap.getOrElse(false),
+            Some(checkpointLocation))
         override def toBatch: Batch =
-          new FluvioBatch(if (rowsCap) opt else opt.copy(rows = Long.MaxValue),
+          new FluvioBatch(if (rowsCap.getOrElse(true)) opt else opt.copy(rows = Long.MaxValue),
             view, baseDir, pruned.fieldNames.toSeq, offLo, offHi, partEq)
       }
     }
@@ -480,26 +467,42 @@ class FluvioBatch(opt: ConsumeOpt, view: RecordView, baseDir: String,
     new FluvioReaderFactory(view, fields)
 }
 
+/** Micro-batch face. With `rowsCap`, `--rows` ends each partition at its
+  * bind-time start + `rows`; `checkpoint` is the source's checkpoint
+  * directory, where the bind-time starts are kept. */
 class FluvioMicroBatchStream(opt: ConsumeOpt, view: RecordView, baseDir: String,
                              maxPerTrigger: Long = 0L,
                              maxBytesPerTrigger: Long = 0L,
                              fields: Seq[String] =
-                               FluvioDsv2.Schema.fieldNames.toSeq)
+                               FluvioDsv2.Schema.fieldNames.toSeq,
+                             rowsCap: Boolean = false,
+                             checkpoint: Option[String] = None)
     extends MicroBatchStream
     with SupportsAdmissionControl with SupportsTriggerAvailableNow {
 
-  /** See [[FluvioDsv2.selectedDirs]] — the contract shared with batch. */
-  private def selectedDirs(): Map[Int, File] =
-    FluvioDsv2.selectedDirs(baseDir, opt)
+  private val windowed = if (rowsCap) opt else opt.copy(rows = Long.MaxValue)
 
-  // admission control, not `--rows`, bounds a micro-batch: the stream's
-  // windows are the uncapped ones
-  private val uncapped = opt.copy(rows = Long.MaxValue)
+  /** Bind-time start per partition, like the reference's calculate_offset
+    * (consume.rs:580-605): end-relative flags read the log end ONCE. The
+    * starts are written to the checkpoint (as the Kafka source writes its
+    * initial offsets), so a restart before any batch committed, and the
+    * `--rows` end, keep the first run's window. */
+  private lazy val starts: Map[Int, Long] = {
+    def fresh = partitionMeta().map { case (p, (rows, _)) => p -> opt.window(rows)._1 }
+    checkpoint.map(c => new Path(c, "bind-starts")).fold(fresh) { f =>
+      val fs = f.getFileSystem(new Configuration())
+      if (!fs.exists(f)) { // written whole, then renamed into place
+        val tmp = f.suffix(".tmp")
+        val out = fs.create(tmp, true)
+        try out.write(FluvioOffset(fresh).json().getBytes("UTF-8")) finally out.close()
+        fs.rename(tmp, f)
+      }
+      val in = fs.open(f)
+      try FluvioOffset.fromJson(new String(in.readAllBytes(), "UTF-8")).positions finally in.close()
+    }
+  }
 
-  override def initialOffset(): Offset =
-    // bind-time start offsets, like the reference's calculate_offset
-    // (consume.rs:580-605): end-relative flags read the log end ONCE here
-    FluvioOffset(partitionMeta().map { case (p, (rows, _)) => p -> uncapped.window(rows)._1 })
+  override def initialOffset(): Offset = FluvioOffset(starts)
 
   /** ONE directory listing + stat pass over the selected partitions:
     * per partition, (row count, on-disk bytes) across its segments. Row
@@ -508,16 +511,20 @@ class FluvioMicroBatchStream(opt: ConsumeOpt, view: RecordView, baseDir: String,
     * per segment ever. Every per-trigger metadata consumer (ends, byte
     * sizing) derives from a single snapshot instead of re-listing. */
   private def partitionMeta(): Map[Int, (Long, Long)] =
-    selectedDirs().map { case (p, d) =>
+    FluvioDsv2.selectedDirs(baseDir, opt).map { case (p, d) =>
       val fs = FluvioDsv2.segmentFiles(d)
       p -> ((fs.map(FluvioDsv2.rowCount).sum, fs.map(_.length()).sum))
     }
 
-  /** Current deliverable end per partition: the window's end against
-    * the current LEO (`--end N` inclusive). Footer-metadata only — no
-    * data read. */
+  /** Current deliverable end per partition: the end of the window from
+    * its bind-time start against the current LEO (`--end N` inclusive),
+    * never below that start. A partition added after bind starts at 0.
+    * Footer-metadata only — no data read. */
   private def currentEnds(meta: Map[Int, (Long, Long)]): Map[Int, Long] =
-    meta.map { case (p, (rows, _)) => p -> uncapped.window(rows)._2 }
+    meta.map { case (p, (rows, _)) =>
+      val from = starts.getOrElse(p, 0L)
+      p -> math.max(from, windowed.until(from, rows))
+    }
 
   private def currentEnds(): Map[Int, Long] = currentEnds(partitionMeta())
 
@@ -667,7 +674,7 @@ class FluvioMicroBatchStream(opt: ConsumeOpt, view: RecordView, baseDir: String,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[FluvioOffset].positions
     val e = end.asInstanceOf[FluvioOffset].positions
-    val dirs = selectedDirs()
+    val dirs = FluvioDsv2.selectedDirs(baseDir, opt)
     // one segment listing per partition serves the data-loss check AND
     // the range→file mapping below (row counts hit the footer cache)
     val filesByPart: Map[Int, Seq[File]] =
@@ -755,8 +762,10 @@ class FluvioColumnarReader(p: FluvioInputPartition, shared: Configuration)
     val conf =
       if (shared.get(key) == requested.json) shared
       else { val c = new Configuration(shared); c.set(key, requested.json); c }
+    // a batch no larger than the rows the slice reads from its first row
+    // group on: a live tick's 500-row slice allocates 500-row vectors
     val r = new VectorizedParquetRecordReader(null, "CORRECTED", "UTC", "CORRECTED",
-      "UTC", false, FluvioDsv2.BatchRows)
+      "UTC", false, math.min(FluvioDsv2.BatchRows.toLong, p.skip + p.take - p.firstRow).toInt)
     try {
       r.initialize(new FileSplit(new Path(p.path), p.byteStart, p.byteEnd - p.byteStart,
         Array.empty[String]), new TaskAttemptContextImpl(conf, new TaskAttemptID()))

@@ -2,24 +2,22 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.{ColumnMapping, ConsumeOpt, OffsetSpec, TopicRegistry, Tables}
-import graft.transforms.TransformChain
+import graft.sources.{ColumnMapping, ConsumeOpt}
+import graft.transforms.{TransformChain, TransformSpec}
 
 /** The `-d` (continuous) flavor of consume: the same option grammar,
-  * projection compiler and transform chain as the batch path, but planned
-  * as a Structured Streaming source (`readStream`) — micro-batch execution,
-  * watermarks and stateful operators compose on top.
+  * projection compiler and transform chain as the batch path, planned over
+  * the micro-batch face of the `fluvio` DSv2 source
+  * ([[graft.sources.v2.FluvioMicroBatchStream]]), so watermarks and
+  * stateful operators compose on top.
   *
   * Reference: `continuous_toggle` (`/root/reference/src/consume.rs:480-482`,
-  * `:675`) — without `-d` a scan stops at the end of the log; with `-d` it
-  * keeps waiting for new records. Spark's file streaming source gives the
-  * same semantics over a growing topic directory: each new parquet dropped
-  * into the topic path becomes a micro-batch.
-  *
-  * Offset-window flags that need the log end (`-T`, default end-of-log) are
-  * meaningless on an unbounded stream — the reference reads them relative
-  * to the log at bind time; here `-B`/`-H`/`--start` filter by offset and
-  * `-T`/default-end raise, which is stricter but explicit.
+  * `:675`) — without `-d` a scan stops at the end of the log; with `-d` the
+  * same consumer keeps waiting for new records. The source owns the offset
+  * window: it resolves each partition's start at bind time (`-T n` and the
+  * default end read the log end once, like the reference's
+  * `calculate_offset`) and keeps those starts in the checkpoint; the `--rows`
+  * cap of a map-only chain ends each partition at bind start + `--rows`.
   */
 object ConsumeStream {
 
@@ -28,63 +26,40 @@ object ConsumeStream {
       case Left(err) => throw new IllegalArgumentException(err)
       case Right(o)  => o
     }
-    // the shared two-message error contract (TopicRegistry.requireRecordView)
-    val view = TopicRegistry.requireRecordView(spark, baseDir, opt.topic)
-    // schema comes from the batch reader (streaming sources need one fixed)
-    val schema = Tables.load(spark, baseDir, opt.topic).schema
-    val raw = spark.readStream.schema(schema)
-      .parquet(TopicRegistry.topicPath(baseDir, opt.topic))
-    // partition selection: the one shared contract (default pins 0,
-    // -p prunes at file listing, -A streams all; single-partition topics
-    // ignore the flags) — see FluvioDsv2.selectedDirs.
-    val selected =
-      if (!raw.columns.contains("partition") || opt.allPartitions) raw
-      else raw.filter(col("partition") === opt.partition)
-    fromRecords(selected, opt, view.offsetCol, view.timestampCol, view.valueCol)
-  }
-
-  /** Shared plan builder: record shape → window → transforms → projection.
-    * Used by [[consume]] and by tests feeding a MemoryStream. */
-  def fromRecords(raw: DataFrame, opt: ConsumeOpt,
-                  offsetCol: String, timestampCol: String, valueCol: String): DataFrame = {
-    val records = raw.select(
-      col(offsetCol).cast("long").as("offset"),
-      col(timestampCol).cast("timestamp").as("timestamp"),
-      col(valueCol).cast("string").as("value"))
-
-    opt.startOffset match {
-      case OffsetSpec.FromEnd(_) | OffsetSpec.End =>
-        throw new IllegalArgumentException(
-          "tail/end-relative offsets are not defined on a continuous stream; use -B/-H/--start")
-      case _ => ()
-    }
-
-    // ---- `--rows` cap. The reference's cap applies in continuous mode
-    // too: `-d --rows N` blocks awaiting new records until N are filled
-    // (/root/reference/src/consume.rs:75-92,675). Two plan shapes:
-    //   * map-only chain (incl. no transforms): offsets are dense, so
-    //     "first N window rows" is part of the window's offset range — a
-    //     pure stateless filter, applied ALWAYS (default included), free
-    //     at any scale.
-    //   * cardinality-changing chain: rows count POST-transform, so the
-    //     window is uncapped and the cap needs a running count — a
-    //     single-key stateful cap ([[boundedCap]]). Planted only for an
-    //     EXPLICIT --rows (a user asking for a bounded pull); the implicit
-    //     default must not put a single-task funnel into every filtered
-    //     100 TB stream.
     val chain = TransformChain.fromOpt(opt)
     val mapOnly = TransformChain.mapOnly(chain)
-    // the bounded-consume window with an unbounded log end; only a bound
-    // that restricts becomes a predicate (`-B` without `--end`/`--rows`
-    // under a filtering chain plans no window filter at all)
-    val (from, until) =
-      (if (mapOnly) opt else opt.copy(rows = Long.MaxValue)).window(Long.MaxValue)
-    val fromOn = if (from > 0) records.filter(col("offset") >= from) else records
-    val windowed = if (until < Long.MaxValue) fromOn.filter(col("offset") < until) else fromOn
-    val transformed = TransformChain.run(chain, windowed)
-    val capped =
-      if (!mapOnly && opt.rowsExplicit) boundedCap(transformed, opt.rows) else transformed
+    // Spark 4.1's micro-batch planner never prunes a streaming scan, so
+    // the read columns are named here: `-c` after a map-only chain decodes
+    // `value` alone
+    val records = spark.readStream.format("fluvio")
+      .option("cmd", cmd).option("baseDir", baseDir)
+      .option("rowsCap", String.valueOf(mapOnly))
+      .option("columns", if (mapOnly && opt.columns.nonEmpty) "value" else "offset,timestamp,value")
+      .load()
+    plan(records, opt, chain)
+  }
 
+  /** The `-d` plan over record-shaped rows from any streaming source (tests
+    * feed a MemoryStream): no offset window, which only the source applies. */
+  def fromRecords(raw: DataFrame, opt: ConsumeOpt,
+                  offsetCol: String, timestampCol: String, valueCol: String): DataFrame =
+    plan(raw.select(
+      col(offsetCol).cast("long").as("offset"),
+      col(timestampCol).cast("timestamp").as("timestamp"),
+      col(valueCol).cast("string").as("value")), opt, TransformChain.fromOpt(opt))
+
+  /** Transforms, then the post-transform `--rows` cap, then the projection.
+    * A map-only chain commutes with the cap, which the source applies as a
+    * row range. A cardinality-changing chain counts kept rows, so an
+    * EXPLICIT `--rows` plants [[boundedCap]]; the implicit default must not
+    * put a single-task funnel into every filtered stream. The reference's
+    * cap applies in continuous mode too: `-d --rows N` blocks until N are
+    * filled (`/root/reference/src/consume.rs:75-92,675`). */
+  private def plan(records: DataFrame, opt: ConsumeOpt, chain: Seq[TransformSpec]): DataFrame = {
+    val transformed = TransformChain.run(chain, records)
+    val capped =
+      if (!TransformChain.mapOnly(chain) && opt.rowsExplicit) boundedCap(transformed, opt.rows)
+      else transformed
     if (opt.columns.isEmpty) capped
     else ColumnMapping.project(capped, opt.columns)
   }

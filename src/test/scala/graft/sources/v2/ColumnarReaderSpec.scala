@@ -16,9 +16,10 @@ import org.scalacheck.util.Pretty
   * segments with small, uneven row groups, a slice [skip, skip+take) of
   * any pruned field subset reads exactly the rows Spark's own parquet
   * scan of the file holds at those positions. Slices cross row-group
-  * edges and the reader's 4,096-row batch edges, so an off-by-one in the
-  * leading-row shift, in the last-batch cut or in the row-group byte
-  * range changes the rows read. */
+  * edges and the reader's batch edges (4,096 rows, or the rows a short
+  * slice reads from its first row group on, like a live tick's 500), so
+  * an off-by-one in the batch size, the leading-row shift, the last-batch
+  * cut or the row-group byte range changes the rows read. */
 class ColumnarReaderSpec extends SparkSpec {
 
   private val view = RecordView("offset", "ts", "value")
@@ -103,6 +104,7 @@ class ColumnarReaderSpec extends SparkSpec {
     def slice(rows: Int) = for {
       skip   <- Gen.choose(0, rows - 1)
       take   <- Gen.frequency(1 -> Gen.choose(1, math.min(3, rows - skip)),
+                              2 -> Gen.choose(1, math.min(600, rows - skip)),
                               3 -> Gen.choose(1, rows - skip))
       fields <- Gen.someOf(FluvioDsv2.Schema.fieldNames.toSeq)
     } yield (skip.toLong, take.toLong, FluvioDsv2.Schema.fieldNames.toSeq.filter(fields.contains))

@@ -224,4 +224,31 @@ class DsvPushdownCanarySpec extends SparkSpec {
     assert(consume("events -T 9 --rows 4") ==
       dump(records.filter(col("offset").between(31, 34))), "end-relative capped window")
   }
+
+  test("-d -c plans one MicroBatchScan that reads `value` only, and no file stream") {
+    val dir = mkTopic("dsv2_continuous_")
+    val q = graft.streaming.ConsumeStream
+      .consume(spark, "events -d -B --rows 7 -c k:i=k", dir.getAbsolutePath)
+      .writeStream.format("noop").start()
+    try {
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan
+      val scans = plan.collect {
+        case s: org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec => s
+      }
+      assert(scans.size == 1, plan)
+      assert(scans.head.scan.readSchema().fieldNames.toSeq == Seq("value"))
+      val planned = scans.head.inputRDD.partitions.collect {
+        case d: org.apache.spark.sql.execution.datasources.v2.DataSourceRDDPartition => d
+      }.flatMap(_.inputPartitions).collect { case f: FluvioInputPartition => f }
+      assert(planned.map(_.take).sum == 7L && planned.forall(_.fields == Seq("value")),
+        planned.toSeq)
+      assert(plan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }.isEmpty, plan)
+      val sources = q.recentProgress.flatMap(_.sources).map(_.description).distinct
+      assert(sources.nonEmpty && sources.forall(!_.contains("FileStreamSource")), sources.toSeq)
+    } finally q.stop()
+  }
 }

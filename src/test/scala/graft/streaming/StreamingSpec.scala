@@ -20,18 +20,27 @@ class StreamingSpec extends SparkSpec {
     spark.table(name).collect().toSeq
   }
 
-  test("stream plan equals batch plan on the same prefix (parity)") {
-    val input = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val batchRows = (0L until 50L).map(i =>
+  /** A one-segment `events` topic under a fresh base dir: offsets
+    * [0, rows), one second apart, payload `{"k": offset % 7}`. */
+  private def topic(rows: Long): java.io.File = {
+    val dir = java.nio.file.Files.createTempDirectory("stream_topic").toFile
+    appendRecords(dir, 0L, rows)
+    dir
+  }
+
+  private def appendRecords(dir: java.io.File, from: Long, until: Long): Unit =
+    (from until until).map(i =>
       (i, new java.sql.Timestamp(1700000000000L + i * 1000), s"""{"k": ${i % 7}}"""))
-    input.addData(batchRows)
-    val o = opt("events -d -H 10 -c k:i=k")
-    val streamed = ConsumeStream.fromRecords(
-      input.toDS.toDF("event_id", "ts", "props"), o, "event_id", "ts", "props")
-    val got = runStream(streamed).map(_.getInt(0))
-    // batch equivalent over the same data
-    val exp = batchRows.filter(_._1 >= 10).map(r => (r._1 % 7).toInt)
-    assert(got.sorted == exp.sorted)
+      .toDF("event_id", "ts", "props").coalesce(1)
+      .write.mode("append").parquet(new java.io.File(dir, "events.parquet").getAbsolutePath)
+
+  test("stream plan equals batch plan on the same prefix (parity)") {
+    val dir = topic(50).getAbsolutePath
+    val got = runStream(ConsumeStream.consume(spark, "events -d -H 10 -c k:i=k", dir))
+      .map(_.getInt(0))
+    val exp = FluvioDuck.consume(spark, "events -H 10 -c k:i=k", dir).collect().map(_.getInt(0))
+    assert(exp.length == 40)
+    assert(got.sorted == exp.toSeq.sorted)
   }
 
   test("streaming consume applies transforms like batch") {
@@ -44,17 +53,6 @@ class StreamingSpec extends SparkSpec {
       input.toDS.toDF("event_id", "ts", "props"), o, "event_id", "ts", "props")
     val got = runStream(streamed)
     assert(got.map(_.getLong(0)) == Seq(5L))
-  }
-
-  test("tail/default-end offsets are rejected on unbounded streams") {
-    val input = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val df = input.toDS.toDF("event_id", "ts", "props")
-    intercept[IllegalArgumentException] {
-      ConsumeStream.fromRecords(df, opt("events -d -T 5"), "event_id", "ts", "props")
-    }
-    intercept[IllegalArgumentException] {
-      ConsumeStream.fromRecords(df, opt("events -d"), "event_id", "ts", "props")
-    }
   }
 
   test("windowed aggregation with watermark over a stream") {
@@ -196,12 +194,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("-d --rows N (map-only): exactly N rows, then later data adds nothing") {
-    val input = MemoryStream[(Long, java.sql.Timestamp, String)]
-    input.addData((0L until 20L).map(i =>
-      (i, new java.sql.Timestamp(1700000000000L + i), s"""{"k": $i}""")))
-    val streamed = ConsumeStream.fromRecords(
-      input.toDS.toDF("event_id", "ts", "props"),
-      opt("events -d -B --rows 5"), "event_id", "ts", "props")
+    val dir = topic(20)
+    val streamed = ConsumeStream.consume(spark, "events -d -B --rows 5", dir.getAbsolutePath)
     val name = s"mem_${System.nanoTime()}"
     val q = streamed.writeStream.format("memory").queryName(name)
       .outputMode("append").start()
@@ -209,8 +203,7 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       assert(spark.table(name).collect().map(_.getLong(0)).sorted.toSeq ==
         (0L until 5L))
-      input.addData((20L until 40L).map(i =>
-        (i, new java.sql.Timestamp(1700000000000L + i), s"""{"k": $i}""")))
+      appendRecords(dir, 20L, 40L)
       q.processAllAvailable()
       assert(spark.table(name).count() == 5) // cap already filled
     } finally q.stop()
